@@ -20,12 +20,12 @@ a live server; this engine exports the same content dependency-free:
   cubes highlighted, maxWeight labels, the sampling summary inlined).
 
 Everything is metadata-bounded driver work over the snapshot — the
-same shape as ``index_metrics``; no data is scanned. On a format-2
-snapshot the block walk runs over the FileKernel arrays (one pandas
-groupby — the LazyFiles facade is never materialized, so the cached
-snapshot keeps its vectorized pruning path); parent links are derived
-arithmetically from the (depth, path-int) encoding instead of the
-reference's per-level O(n^2) prefix scan.
+same shape as ``index_metrics``; no data is scanned. The block walk
+runs over ``FileKernel.view`` (base arrays plus the object tail, one
+pandas groupby — a format-2 snapshot's LazyFiles facade is never
+materialized, so it keeps its vectorized pruning path); parent links
+are derived arithmetically from the (depth, path-int) encoding instead
+of the reference's per-level O(n^2) prefix scan.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from typing import Any, Dict, List, Optional
 import numpy as np
 
 from ..core.weight import INT_MIN, RANGE
-from ..sources.metadata import _parse_cube
+from ..sources.metadata import FileKernel, _parse_cube
 
 __all__ = ["cube_tree", "sampling_info", "export_json", "export_html"]
 
@@ -52,40 +52,26 @@ def _norm_arr(w):
     return np.round(np.clip((w - INT_MIN) / RANGE, 0.0, 1.0), 3)
 
 
-def _block_frame_from_kernel(kernel, revision_id: int):
-    """(block rows, file_meta) off the FileKernel arrays + its object
-    tail — no IndexFile materialization, no LazyFiles drop."""
+def _block_frame(kernel, revision_id: int):
+    """(block rows, file_meta) of one revision off the FileKernel arrays
+    plus a walk of its object tail — no IndexFile materialization, no
+    LazyFiles drop."""
     import pandas as pd
 
     m_file = kernel.alive & (kernel.revision_ids == revision_id)
     m_blk = m_file[kernel.b_file]
-    cols = {
+    df = pd.DataFrame({
         "cube": kernel.b_cube[m_blk],
         "minw": kernel.b_minw[m_blk],
         "maxw": kernel.b_maxw[m_blk],
         "count": kernel.b_count[m_blk],
         "path": kernel.paths[kernel.b_file[m_blk]],
-    }
+    })
     file_meta = {p: (int(s), int(r)) for p, s, r in
                  zip(kernel.paths[m_file], kernel.sizes[m_file],
                      kernel.rows[m_file])}
-    df = pd.DataFrame(cols)
-    # the (small) post-checkpoint tail holds real IndexFile objects —
-    # reuse the object walk for it
-    tail_df, tail_meta = _block_frame_from_objects(
-        kernel.tail.values(), revision_id)
-    if len(tail_df):
-        df = pd.concat([df, tail_df], ignore_index=True)
-    file_meta.update(tail_meta)
-    return df, file_meta
-
-
-def _block_frame_from_objects(files, revision_id: int):
-    import pandas as pd  # noqa: F811 — lazy import in both frame builders
-
     rows = [[], [], [], [], []]
-    file_meta = {}
-    for f in files:
+    for f in kernel.tail.values():
         if f.revision_id != revision_id:
             continue
         file_meta[f.path] = (f.size, f.rows)
@@ -95,8 +81,10 @@ def _block_frame_from_objects(files, revision_id: int):
             rows[2].append(b.max_weight)
             rows[3].append(b.count)
             rows[4].append(f.path)
-    return pd.DataFrame(dict(zip(
-        ("cube", "minw", "maxw", "count", "path"), rows))), file_meta
+    if rows[0]:
+        df = pd.concat([df, pd.DataFrame(dict(zip(df.columns, rows)))],
+                       ignore_index=True)
+    return df, file_meta
 
 
 def cube_tree(snapshot, revision_id: Optional[int] = None,
@@ -122,12 +110,8 @@ def cube_tree(snapshot, revision_id: Optional[int] = None,
             f"no revision {revision_id}; available: {sorted(revs)}")
     dims = rev.dims
 
-    kernel = getattr(snapshot.files, "kernel", None)
-    if kernel is not None:
-        df, file_meta = _block_frame_from_kernel(kernel, revision_id)
-    else:
-        df, file_meta = _block_frame_from_objects(
-            snapshot.files.values(), revision_id)
+    df, file_meta = _block_frame(FileKernel.view(snapshot.files),
+                                 revision_id)
 
     cubes: Dict[str, Dict[str, Any]] = {}
     if len(df):

@@ -37,6 +37,7 @@ from ..core.transform import LinearTransformation
 from ..core.weight import INT_MAX
 from ..index.analyzer import with_index_columns
 from .log import CommitLog
+from .metadata import FileKernel
 from .writer import _complete_file_map, _cube_str, _materialize, _parse_cube
 
 __all__ = ["delete_rows", "update_rows", "merge_rows"]
@@ -498,9 +499,7 @@ def delete_rows(spark, path: str, filters=None,
     candidates, residual = qt._candidates_and_residual(filters, snap)
     _reject_nondeterministic(qt, snap, residual, "DELETE")
     if residual is None:
-        kernel = getattr(snap.files, "kernel", None)
-        rows = kernel.live_rows_sum() if kernel is not None \
-            else sum(f.live_rows for f in snap.files.values())
+        rows = FileKernel.view(snap.files).live_rows_sum()
         version = qt.log.commit(add=[], remove=list(snap.files.keys()),
                                 schema_json=snap.schema_json,
                                 data_change=True, operation="DELETE",

@@ -772,15 +772,10 @@ class CommitLog:
         fmt = self._checkpoint_format_for(snap)
         base = os.path.join(self.log_dir, f"{snap.version:012d}")
         if fmt == 2:
-            from .metadata import FileKernel, LazyFiles
+            from .metadata import FileKernel
 
-            kernel = snap.files.kernel \
-                if isinstance(snap.files, LazyFiles) else None
-            if kernel is not None:
-                kernel.to_parquet(base + ".checkpoint.parquet")
-            else:
-                FileKernel.parquet_from_files(
-                    snap.files, base + ".checkpoint.parquet")
+            FileKernel.view(snap.files).to_parquet(
+                base + ".checkpoint.parquet")
             state_dst = base + ".checkpoint.state.parquet"
             if not _copy_forward_cube_state(snap.cube_weights,
                                             snap.cube_domains, state_dst):

@@ -24,9 +24,9 @@ batches:
 4. optionally vacuum files dropped before ``vacuum_retention_hours``.
 
 Every step is itself a metadata-bounded driver decision: thresholds are
-evaluated against the snapshot — vectorized over FileKernel arrays on
-format-2 snapshots (sources/metadata.py), object-walked only on legacy
-JSON snapshots — never by scanning data."""
+evaluated against the snapshot through ``FileKernel.view``
+(sources/metadata.py) — vectorized over a format-2 snapshot's arrays,
+the kernel's tail walk for JSON snapshots — never by scanning data."""
 
 from __future__ import annotations
 
@@ -35,57 +35,31 @@ from typing import Any, Dict, Optional
 from ..core.revision import STAGING_REVISION_ID
 from .compact import compact_table
 from .log import CommitLog
+from .metadata import FileKernel
 from .optimize import optimize_table
 
 __all__ = ["auto_maintain"]
 
 
-def _kernel(snap):
-    """FileKernel behind a format-2 snapshot's LazyFiles, if it is still
-    unmaterialized; None → fall back to the object walk (JSON snapshots,
-    or a snapshot some earlier caller already materialized)."""
-    return getattr(snap.files, "kernel", None)
-
-
 def _staging_rows(snap) -> int:
-    k = _kernel(snap)
-    if k is not None:
-        return k.staging_rows_sum(STAGING_REVISION_ID)
-    return sum(f.live_rows for f in snap.files.values()
-               if f.revision_id == STAGING_REVISION_ID)
+    return FileKernel.view(snap.files).staging_rows_sum(STAGING_REVISION_ID)
 
 
 def _staging_paths(snap):
-    k = _kernel(snap)
-    if k is not None:
-        return k.paths_in_revision(STAGING_REVISION_ID)
-    return [f.path for f in snap.files.values()
-            if f.revision_id == STAGING_REVISION_ID]
+    return FileKernel.view(snap.files).paths_in_revision(STAGING_REVISION_ID)
 
 
 def _live_revisions(snap):
-    k = _kernel(snap)
-    if k is not None:
-        return k.live_revision_ids(STAGING_REVISION_ID)
-    return sorted({f.revision_id for f in snap.files.values()
-                   if f.revision_id != STAGING_REVISION_ID})
+    return FileKernel.view(snap.files).live_revision_ids(STAGING_REVISION_ID)
 
 
 def _old_revision_paths(snap, keep_rev: int):
-    k = _kernel(snap)
-    if k is not None:
-        return k.paths_excluding_revisions((STAGING_REVISION_ID, keep_rev))
-    return [f.path for f in snap.files.values()
-            if f.revision_id != STAGING_REVISION_ID
-            and f.revision_id != keep_rev]
+    return FileKernel.view(snap.files).paths_excluding_revisions(
+        (STAGING_REVISION_ID, keep_rev))
 
 
 def _small_file_count(snap, small_file_bytes: int) -> int:
-    k = _kernel(snap)
-    if k is not None:
-        return k.small_file_count(small_file_bytes)
-    return sum(1 for f in snap.files.values()
-               if f.size < small_file_bytes)
+    return FileKernel.view(snap.files).small_file_count(small_file_bytes)
 
 
 def auto_maintain(spark, path: str, *,

@@ -22,6 +22,13 @@ PARQUET and snapshots hold it as NumPy columns:
   drops the kernel (the write/DML paths that walk whole files pay the
   object cost only when they actually run).
 
+``FileKernel.view(snap.files)`` is the one file-state API every reader
+of file state goes through (pruning, sampling, tallies, checkpoint
+writes). A JSON-seeded (or already materialized) snapshot has no
+columnar half: its view is an O(1) read-only kernel with an EMPTY base
+whose ``tail`` is the snapshot's own dict, so the same kernel code
+serves both formats and each object walk exists once, as the tail half.
+
 Old engines never mis-read a format-2 checkpoint: its small state lives
 in ``*.checkpoint.meta.json`` (not ``*.checkpoint.json``), so a legacy
 ``_last_checkpoint_version`` finds no checkpoint and falls back to the
@@ -52,6 +59,8 @@ class FileKernel:
     read; post-checkpoint replay lands in ``tail`` (adds, insertion-
     ordered) and ``alive`` (tombstones). All arrays share base order."""
 
+    read_only = False       # True on view() kernels over a plain dict
+
     def __init__(self, paths, sizes, rows, revision_ids, dv_json, dv_card,
                  blooms_json, stats, b_offsets, b_file, b_cube, b_depth,
                  b_path, b_minw, b_maxw, b_count):
@@ -79,31 +88,44 @@ class FileKernel:
         self._singles: Dict[str, "IndexFile"] = {}
         self._tail_arrays = None    # cache, invalidated by add/remove
 
+    @staticmethod
+    def view(files) -> "FileKernel":
+        """The kernel behind ``files``: the live one of a columnar
+        ``LazyFiles``; for any other mapping an O(1) read-only kernel
+        with an empty base whose ``tail`` IS ``files`` (not a copy)."""
+        kernel = getattr(files, "kernel", None)
+        if kernel is not None:
+            return kernel
+        objs = np.empty(0, dtype=object)
+        ints = np.empty(0, dtype=np.int64)
+        kernel = FileKernel(objs, ints, ints, ints, objs, ints, objs, {},
+                            np.zeros(1, dtype=np.int64), ints, objs, ints,
+                            ints, ints, ints, ints)
+        kernel.tail = files
+        kernel.read_only = True
+        return kernel
+
     def tail_arrays(self):
         """Vectorizable view of the post-checkpoint tail: (ordered file
-        list, file revision ids, per-block file idx / depth / path /
-        min weight / max weight). Cached — a snapshot's tail only
-        mutates during replay, and pruning may run many times after."""
+        list, file revision ids, per-block file idx / depth / path).
+        Cached — a snapshot's tail only mutates during replay, and
+        pruning may run many times after."""
         if self._tail_arrays is None:
             files = list(self.tail.values())
             revs = np.array([f.revision_id for f in files],
                             dtype=np.int64)
-            bf, bd, bp, bmin, bmax = [], [], [], [], []
+            bf, bd, bp = [], [], []
             for i, f in enumerate(files):
                 for b in f.blocks:
                     d, p = _parse_cube(b.cube)
                     bf.append(i)
                     bd.append(d)
                     bp.append(p)
-                    bmin.append(b.min_weight)
-                    bmax.append(b.max_weight)
             self._tail_arrays = (
                 files, revs,
                 np.array(bf, dtype=np.int64),
                 np.array(bd, dtype=np.int64),
-                np.array(bp, dtype=np.int64),
-                np.array(bmin, dtype=np.int64),
-                np.array(bmax, dtype=np.int64))
+                np.array(bp, dtype=np.int64))
         return self._tail_arrays
 
     # -- path index -------------------------------------------------------
@@ -172,6 +194,8 @@ class FileKernel:
                          blocks, stats, blooms, dv)
 
     def add(self, f) -> None:
+        if self.read_only:
+            raise TypeError("FileKernel.view over a dict is read-only")
         i = self._idx(f.path)
         if i is not None:
             self.alive[i] = False
@@ -180,6 +204,8 @@ class FileKernel:
         self._tail_arrays = None
 
     def remove(self, path: str) -> bool:
+        if self.read_only:
+            raise TypeError("FileKernel.view over a dict is read-only")
         if self.tail.pop(path, None) is not None:
             self._tail_arrays = None
             return True
@@ -373,7 +399,9 @@ class FileKernel:
         without materializing base files into objects: the base half is
         pure array slicing into arrow (no per-row Python), the small
         tail goes through the object builder, and the two concatenate
-        with null-fill for columns only one side carries."""
+        with null-fill for columns only one side carries. A view()
+        kernel's base is empty, so its table is the tail's alone (the
+        first parquet checkpoint of a previously-JSON table)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -423,18 +451,6 @@ class FileKernel:
                                     promote_options="default")
         tmp = path + ".tmp"
         pq.write_table(base, tmp, compression="snappy")
-        os.replace(tmp, path)
-
-    @staticmethod
-    def parquet_from_files(files: Dict[str, "IndexFile"],
-                           path: str) -> None:
-        """Write a format-2 files table straight from IndexFile objects
-        (the first parquet checkpoint of a previously-JSON table)."""
-        import pyarrow.parquet as pq
-
-        table = _files_arrow_table(files, None)
-        tmp = path + ".tmp"
-        pq.write_table(table, tmp, compression="snappy")
         os.replace(tmp, path)
 
 

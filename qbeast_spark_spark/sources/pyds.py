@@ -32,9 +32,10 @@ Semantics and scale notes:
   tests/test_predicate_fuzz.py). Options are part of the relation
   identity, so option-derived pruning is reuse-safe.
 - ``option("fraction", f)`` is the ``df.sample(f)`` pushdown the
-  reference implements as a Catalyst rule: block-level file pruning plus
-  the EXACT residual weight predicate, evaluated in the Python worker by
-  the NumPy murmur3 twin (core/sparkhash.py) — returns byte-for-byte the
+  reference implements as a Catalyst rule: block-level file pruning (the
+  same ``sample_files`` as ``QbeastTable.sample_files``) plus the EXACT
+  residual weight predicate, evaluated in the Python worker by the NumPy
+  murmur3 twin (core/sparkhash.py) — returns byte-for-byte the
   rows ``QbeastTable.sample(f)`` returns.
 - **The streaming source replays the commit log**: offsets are log
   versions, the first batch is the table snapshot at stream start (like
@@ -86,7 +87,8 @@ from .deletion_vectors import DVDescriptor, descriptor_positions
 from .log import Block, CommitLog, IndexFile, Snapshot
 from .predicates import to_dnf_filters
 from .qbeast_format import read_qbeast_delta_snapshot
-from .reader import _timestamp_to_ms, prune_files
+from .reader import (_timestamp_to_ms, prune_files, sample_files,
+                     sample_hash_columns)
 
 __all__ = ["QbeastDataSource", "register"]
 
@@ -344,7 +346,6 @@ class QbeastBatchReader:
             version = CommitLog(self.path).version_at_timestamp(
                 _timestamp_to_ms(ts))
         snap = _load_snapshot(self.path, version)
-        rels = list(snap.files.keys())
         hash_cols = None
         w_from, w_to = INT_MIN, INT_MAX
         if self.fraction < 1.0 or self.lower_bound > 0.0:
@@ -356,9 +357,10 @@ class QbeastBatchReader:
             hash_cols = rev.column_names
             w_to = fraction_to_weight(self.fraction)
             w_from = fraction_to_weight(self.lower_bound)
-            rels = [r for r in rels
-                    if any(b.min_weight < w_to and b.max_weight >= w_from
-                           for b in snap.files[r].blocks)]
+            # same order as snap.files.keys(): base, then tail
+            rels = sample_files(snap, self.fraction, self.lower_bound)
+        else:
+            rels = list(snap.files.keys())
         dnf = self._where_dnf()
         if dnf:
             boxed = set()
@@ -366,27 +368,15 @@ class QbeastBatchReader:
                 boxed.update(prune_files(snap, conj))
             rels = [r for r in rels if r in boxed]
 
-        def _cols_for(rel):
-            # per-REVISION hash columns (same r6 golden-fixture finding
-            # as reader.sample): a file's block weights were assigned
-            # from ITS revision's columns — hashing an imported
-            # different-column revision with the latest revision's
-            # columns under-samples it. Staging (revision 0) files keep
-            # the latest revision's hash, like reader.sample.
-            if hash_cols is None:
-                return None
-            rid = snap.files[rel].revision_id
-            rr = snap.revisions.get(rid)
-            if rid and rr is not None and rr.column_names:
-                return rr.column_names
-            return hash_cols
-
         return [
             _FilePartition(
                 abs_path=os.path.join(self.path, r),
                 table_path=self.path,
                 dv_json=snap.files[r].dv,
-                hash_cols=_cols_for(r), w_from=w_from, w_to=w_to)
+                hash_cols=(None if hash_cols is None else
+                           sample_hash_columns(
+                               snap, snap.files[r].revision_id, hash_cols)),
+                w_from=w_from, w_to=w_to)
             for r in rels
         ]
 

@@ -24,9 +24,13 @@ import numpy as np
 from ..core.revision import Revision, STAGING_REVISION_ID
 from ..core.transform import HashTransformation, literal_to_number
 from ..core.weight import fraction_to_weight
+# prune_files / sample_files also run in pyds planning, inside Spark's
+# Python workers where this package is not on sys.path: what they call
+# is imported here, never lazily
 from ..functions.bloom import blooms_exclude
 from ..index.vectorized import cube_ranges
 from .log import CommitLog, Snapshot
+from .metadata import FileKernel
 
 __all__ = ["QbeastTable", "FilterTuple", "read_qbeast"]
 
@@ -330,24 +334,10 @@ class QbeastTable:
 
         snap = self.snapshot(refresh=True)
         small = 32 * 1024 * 1024
-        kernel = getattr(snap.files, "kernel", None)
-        if kernel is not None:
-            # format-2: one pass over the kernel arrays — detail() on a
-            # 10^6-file table must not materialize IndexFile objects
-            t = kernel.detail_tallies(STAGING_REVISION_ID, small)
-        else:
-            files = list(snap.files.values())
-            t = {
-                "numFiles": len(files),
-                "numRows": sum(f.live_rows for f in files),
-                "sizeInBytes": sum(f.size for f in files),
-                "numSmallFiles": sum(1 for f in files if f.size < small),
-                "numDV": sum(1 for f in files if f.dv),
-                "numStaging": sum(
-                    1 for f in files
-                    if f.revision_id == STAGING_REVISION_ID),
-                "revisions": {f.revision_id for f in files},
-            }
+        # one pass over the kernel arrays — detail() on a 10^6-file
+        # table must not materialize IndexFile objects
+        t = FileKernel.view(snap.files).detail_tallies(STAGING_REVISION_ID,
+                                                       small)
         return {
             "location": self.path,
             "version": snap.version,
@@ -476,11 +466,8 @@ class QbeastTable:
         # superseded by later deletes or dropped by optimize rewrites go
         from .deletion_vectors import DVDescriptor, dv_abs_path
 
-        kernel = getattr(snap.files, "kernel", None)
-        dv_dicts = kernel.live_dvs() if kernel is not None \
-            else [f.dv for f in snap.files.values() if f.dv]
         live_dvs = set()
-        for dv in dv_dicts:
+        for dv in FileKernel.view(snap.files).live_dvs():
             p = dv_abs_path(self.path, DVDescriptor.from_json(dv))
             if p:
                 live_dvs.add(os.path.relpath(os.path.abspath(p),
@@ -661,26 +648,13 @@ class QbeastTable:
         if rev is None:
             df = self._df_for_files(selected, snap=snap).sample(fraction)
             return df.where(residual) if residual is not None else df
-        # Per-REVISION hash filtering (r6, found by the golden-fixture
-        # parity test): a file's block weights were assigned from ITS
-        # revision's column hash, so the row-level range filter must use
-        # the same columns. Filtering every file through the latest
-        # revision's hash under-samples any revision indexing DIFFERENT
-        # columns (possible on imported reference tables; native
-        # revisions only widen ranges over the same columns, where the
-        # groups collapse to one and the plan is unchanged). Staging
-        # (revision 0) files carry no weights and keep the previous
-        # behavior: the latest revision's hash, deterministic and
-        # fraction-exact.
-        latest_cols = tuple(rev.column_names)
+        # per-revision hash filtering (sample_hash_columns): native
+        # revisions share their columns, so the groups collapse to one
         groups: dict = {}
         for rel in selected:
-            rid = snap.files[rel].revision_id
-            r = snap.revisions.get(rid)
-            cols = (tuple(r.column_names)
-                    if rid and r is not None and r.column_names
-                    else latest_cols)
-            groups.setdefault(cols, []).append(rel)
+            cols = sample_hash_columns(snap, snap.files[rel].revision_id,
+                                       rev.column_names)
+            groups.setdefault(tuple(cols), []).append(rel)
         parts = []
         for cols, files in sorted(groups.items()):
             hash_col = F.hash(*[F.col(c) for c in cols])
@@ -719,9 +693,7 @@ class QbeastTable:
         if not (0.0 < precision):
             raise ValueError("precision must be > 0")
         snap = self.snapshot(refresh=True)
-        kernel = getattr(snap.files, "kernel", None)
-        total_rows = kernel.rows_sum() if kernel is not None \
-            else sum(f.rows for f in snap.files.values())
+        total_rows = FileKernel.view(snap.files).rows_sum()
         if total_rows == 0:
             return self.to_df(), 1.0
         pilot = (self.sample(min(max(pilot_fraction, 2000.0 / total_rows),
@@ -776,31 +748,8 @@ class QbeastTable:
         """The pruned file list a sample(fraction) read would touch — the
         observable form of the reference's file-pruning invariant
         (TestUtils.checkFileFiltering:60-83)."""
-        snap = snap or self.snapshot(refresh=True)
-        w_to = fraction_to_weight(fraction)
-        w_from = fraction_to_weight(lower_bound)
-        kernel = getattr(snap.files, "kernel", None)
-        if kernel is not None:
-            # columnar snapshot: one vectorized pass over the block
-            # weight arrays + the small object tail
-            bmask = kernel.alive[kernel.b_file] \
-                & (kernel.b_minw < w_to) & (kernel.b_maxw >= w_from)
-            selected = [kernel.paths[i]
-                        for i in np.unique(kernel.b_file[bmask])]
-            tfiles, _tr, tb_file, _td, _tp, tb_minw, tb_maxw = \
-                kernel.tail_arrays()
-            if len(tfiles):
-                tmask = (tb_minw < w_to) & (tb_maxw >= w_from)
-                selected += [tfiles[i].path
-                             for i in np.unique(tb_file[tmask])]
-            return selected
-        selected = []
-        for rel, f in snap.files.items():
-            for b in f.blocks:
-                if b.min_weight < w_to and b.max_weight >= w_from:
-                    selected.append(rel)
-                    break
-        return selected
+        return sample_files(snap or self.snapshot(refresh=True), fraction,
+                            lower_bound)
 
     def prune_scan(self, filters):
         """File-pruned scan WITHOUT the residual predicate: reads only
@@ -1267,121 +1216,112 @@ def prune_files(snap: Snapshot,
     query space of the filters (QuerySpace.intersectsWith:81-97), then
     apply per-file column-stats / Bloom skipping. Module-level (needs no
     SparkSession) so the Python Data Source planner (sources/pyds.py)
-    prunes with the exact same logic as QbeastTable.
-
-    A format-2 (parquet-checkpoint) snapshot keeps its file state
-    columnar; the kernel path below computes the same keep set fully
-    vectorized — no per-file Python objects at 10^5-10^6 files."""
-    kernel = getattr(snap.files, "kernel", None)
-    if kernel is not None:
-        return _prune_kernel(kernel, snap, filters)
-    by_rev: Dict[int, List[Tuple[str, str]]] = {}
-    for rel, f in snap.files.items():
-        by_rev.setdefault(f.revision_id, []).extend(
-            (rel, b.cube) for b in f.blocks)
-
-    keep: set = set()
-    for rev_id, entries in by_rev.items():
-        rev = snap.revisions.get(rev_id)
-        if rev is None or rev.is_staging:
-            keep.update(rel for rel, _ in entries)  # cannot prune staging
-            continue
-        space = _query_space(rev, filters)
-        if space is None:  # no indexed-column predicate -> no pruning
-            keep.update(rel for rel, _ in entries)
-            continue
-        lo, hi = space
-        depths = np.array([_parse_cube(c)[0] for _, c in entries],
-                          dtype=np.int64)
-        paths = np.array([_parse_cube(c)[1] for _, c in entries],
-                         dtype=np.int64)
-        frm, to = cube_ranges(depths, paths, rev.dims)
-        inter = np.ones(len(entries), dtype=bool)
-        for i in range(rev.dims):
-            inter &= (frm[:, i] <= hi[i]) & (to[:, i] >= lo[i])
-        for j in np.flatnonzero(inter):
-            keep.add(entries[j][0])
-    # Delta-style data skipping on ANY column with recorded per-file
-    # [min, max] stats — prunes on non-indexed columns too — plus
-    # opt-in Bloom filters for string point lookups; both compose
-    # with the cube pruning above (intersection). blooms_exclude is a
-    # module-level import: a lazy import here would resolve by name in
-    # Spark's Python workers, where this package is not on sys.path.
-    return sorted(p for p in keep
-                  if not _stats_exclude(snap.files[p], filters)
-                  and not blooms_exclude(snap.files[p].blooms, filters))
+    prunes with the exact same logic as QbeastTable. Runs over
+    ``FileKernel.view``: vectorized over a columnar base, the per-file
+    objects of a JSON snapshot go through the kernel's tail lane."""
+    return _prune_kernel(FileKernel.view(snap.files), snap, filters)
 
 
-def _kernel_stats_cmp_ok(kind: str, val) -> bool:
-    """Whether a filter literal is comparable against a stats column of
-    ``kind`` with EXACTLY the scalar path's semantics: incomparable
-    types never prune (the scalar path catches TypeError per file), and
-    int/float cross-kind comparisons beyond float64's exact integer
-    range are refused (the scalar path compares exact Python ints; the
-    vectorized path would round through float64 and could wrongly
-    prune)."""
-    if isinstance(val, bool):
-        return kind in ("i", "f")
-    if isinstance(val, int):
-        return kind == "i" or (kind == "f" and abs(val) <= 2 ** 52)
-    if isinstance(val, float):
-        return kind == "f" or (kind == "i" and abs(val) <= 2 ** 52)
+def sample_files(snap: Snapshot, fraction: float,
+                 lower_bound: float = 0.0) -> List[str]:
+    """Files owning >= 1 block whose weight range meets the sample's
+    [lower_bound, fraction) weight window — the file list a sample read
+    touches (the reference's TestUtils.checkFileFiltering:60-83). One
+    vectorized pass over the base block arrays, then an early-exit walk
+    of the object tail (cheaper there than building its arrays)."""
+    kernel = FileKernel.view(snap.files)
+    w_to = fraction_to_weight(fraction)
+    w_from = fraction_to_weight(lower_bound)
+    bmask = kernel.alive[kernel.b_file] \
+        & (kernel.b_minw < w_to) & (kernel.b_maxw >= w_from)
+    selected = [kernel.paths[i] for i in np.unique(kernel.b_file[bmask])]
+    for rel, f in kernel.tail.items():
+        for b in f.blocks:
+            if b.min_weight < w_to and b.max_weight >= w_from:
+                selected.append(rel)
+                break
+    return selected
+
+
+def sample_hash_columns(snap: Snapshot, revision_id: int,
+                        latest_columns: Sequence[str]) -> Sequence[str]:
+    """Columns whose hash a sample's row-level weight filter uses for a
+    file of ``revision_id`` (found by the golden-fixture parity test): a
+    file's block weights came from ITS revision's column hash, and
+    filtering through the latest revision's hash under-samples any
+    revision indexing different columns (imported reference tables).
+    Staging (revision 0) files carry no weights and use the latest
+    revision's columns, deterministic and fraction-exact."""
+    r = snap.revisions.get(revision_id)
+    if revision_id and r is not None and r.column_names:
+        return r.column_names
+    return latest_columns
+
+
+def _kernel_cmp_arrays(kind: str, mns, mxs, val):
+    """The stats arrays to compare a filter literal against with EXACTLY
+    the scalar path's (Python) semantics, or None when the scalar path
+    raises TypeError (incomparable types never prune). NumPy compares
+    int64 with float64 by rounding through float64, so an int/float pair
+    outside float64's exact integer range compares as Python objects."""
     if isinstance(val, str):
-        return kind == "s"
-    return False
+        return (mns, mxs) if kind == "s" else None
+    if not isinstance(val, (int, float)) or kind not in ("i", "f"):
+        return None
+    if isinstance(val, float):
+        exact = kind == "f" or not len(mns) or max(
+            -int(mns.min()), int(mxs.max())) <= 2 ** 53
+    else:
+        exact = -2 ** 63 <= val < 2 ** 63 if kind == "i" \
+            else abs(val) <= 2 ** 53
+    return (mns, mxs) if exact else (mns.astype(object),
+                                     mxs.astype(object))
+
+
+# (literal, file min, file max) -> the [min, max] range PROVES no row
+# matches; the same comparisons as _stats_exclude
+_CLAUSE_VIOL = {
+    "=": lambda v, mn, mx: (v < mn) | (v > mx),
+    "==": lambda v, mn, mx: (v < mn) | (v > mx),
+    ">": lambda v, mn, mx: mx <= v,
+    ">=": lambda v, mn, mx: mx < v,
+    "<": lambda v, mn, mx: mn >= v,
+    "<=": lambda v, mn, mx: mn > v,
+}
 
 
 def _kernel_clause_viol(kind, mns, mxs, present, op, val):
     """Vectorized single-clause violation mask over the base stats
     arrays (True = the file's [min,max] range PROVES no row matches),
     or None when the clause cannot prune. Mirrors _stats_exclude."""
-    if op in ("=", "=="):
-        if not _kernel_stats_cmp_ok(kind, val):
+    viol = _CLAUSE_VIOL.get(op)
+    if viol is not None:
+        arrs = _kernel_cmp_arrays(kind, mns, mxs, val)
+        if arrs is None:
             return None
-        if kind == "s":
+        mns, mxs = arrs
+        if kind == "s":     # absent entries hold None: compare present
             v = np.zeros(len(mns), dtype=bool)
             idx = np.flatnonzero(present)
-            v[idx] = [(val < mns[i]) or (val > mxs[i]) for i in idx]
+            v[idx] = [bool(viol(val, mns[i], mxs[i])) for i in idx]
             return v
-        return present & ((val < mns) | (val > mxs))
-    if op in (">", ">=", "<", "<="):
-        if not _kernel_stats_cmp_ok(kind, val):
-            return None
-        if kind == "s":
-            v = np.zeros(len(mns), dtype=bool)
-            idx = np.flatnonzero(present)
-            if op == ">":
-                v[idx] = [mxs[i] <= val for i in idx]
-            elif op == ">=":
-                v[idx] = [mxs[i] < val for i in idx]
-            elif op == "<":
-                v[idx] = [mns[i] >= val for i in idx]
-            else:
-                v[idx] = [mns[i] > val for i in idx]
-            return v
-        if op == ">":
-            return present & (mxs <= val)
-        if op == ">=":
-            return present & (mxs < val)
-        if op == "<":
-            return present & (mns >= val)
-        return present & (mns > val)
+        return present & viol(val, mns, mxs)
     if op == "in":
         try:
             vals = list(val)
         except TypeError:
             return None
-        if not all(_kernel_stats_cmp_ok(kind, v) for v in vals):
-            # scalar path: any incomparable member raises TypeError and
-            # the whole clause is skipped
-            return None
         # an empty IN list matches nothing -> every file with recorded
         # stats for the column is excluded (scalar all([]) semantics)
-        viol = present.copy()
+        out = present.copy()
         for v in vals:
             sub = _kernel_clause_viol(kind, mns, mxs, present, "=", v)
-            viol &= sub
-        return viol
+            if sub is None:
+                # scalar path: an incomparable member raises TypeError
+                # and the whole clause is skipped
+                return None
+            out &= sub
+        return out
     return None
 
 
@@ -1389,8 +1329,10 @@ def _prune_kernel(kernel, snap: Snapshot,
                   filters: Sequence[FilterTuple]) -> List[str]:
     """prune_files over a FileKernel: cube intersection vectorized on
     the pre-parsed (depth, path) block arrays, stats skipping vectorized
-    per filter clause, Bloom checks only on the survivors, and the small
-    post-checkpoint object tail handled by the per-file scalar path."""
+    per filter clause, Bloom checks only on the survivors. The object
+    tail (post-checkpoint adds, or a whole JSON snapshot's files) gets
+    its cube test vectorized over ``tail_arrays`` and the per-file
+    scalar stats / Bloom checks."""
     alive = kernel.alive
     n = len(kernel.paths)
     keep_mask = np.zeros(n, dtype=bool)
@@ -1398,8 +1340,8 @@ def _prune_kernel(kernel, snap: Snapshot,
     for rid in np.unique(kernel.revision_ids[alive]):
         rid = int(rid)
         fmask = alive & (kernel.revision_ids == rid)
-        # object-path parity: only files with >= 1 block participate
-        # (a zero-block entry never lands in its by_rev `entries`)
+        # only files with >= 1 block participate (zero-block files are
+        # never kept, base or tail)
         blocked = np.unique(kernel.b_file[fmask[kernel.b_file]])
         rev = snap.revisions.get(rid)
         if rev is None or rev.is_staging:
@@ -1441,13 +1383,11 @@ def _prune_kernel(kernel, snap: Snapshot,
         if bj and blooms_exclude(json.loads(bj), filters):
             continue
         out.append(p)
-    # post-checkpoint tail: the files added since the last checkpoint,
-    # vectorized over the kernel's cached tail arrays (one cube_ranges
-    # call per revision — a per-file loop here measured as THE prune
-    # bottleneck at soak scale). Zero-block files never survive
-    # (object-path parity: they have no by_rev entries).
-    tfiles, trevs, tb_file, tb_depth, tb_path, _tmin, _tmax = \
-        kernel.tail_arrays()
+    # object tail, vectorized over the kernel's cached tail arrays (one
+    # cube_ranges call per revision — a per-file loop here measured as
+    # THE prune bottleneck at soak scale). Zero-block files never
+    # survive, like zero-block base files.
+    tfiles, trevs, tb_file, tb_depth, tb_path = kernel.tail_arrays()
     if len(tfiles):
         tkeep = np.zeros(len(tfiles), dtype=bool)
         for rid in np.unique(trevs):

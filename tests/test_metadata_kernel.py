@@ -141,6 +141,36 @@ def test_kernel_prune_equals_object_path(spark, tmp_table):
         [("no_such_col", ">", 5)],
         [("l_orderkey", "in", [])],            # empty IN excludes all
         [("l_orderkey", ">", "zzz")],          # cross-type: never prunes
+        # adversarial literals: NaN / +-inf against float stats
+        [("l_extendedprice", ">", float("nan"))],
+        [("l_extendedprice", "=", float("nan"))],
+        [("l_quantity", "<=", float("nan"))],
+        [("l_extendedprice", "<", float("inf"))],
+        [("l_extendedprice", ">", float("inf"))],
+        [("l_quantity", ">=", float("-inf"))],
+        [("l_quantity", "<", float("-inf"))],
+        [("l_quantity", "in", [float("nan"), float("-inf")])],
+        # ints beyond float64's exact range, against int and float stats
+        [("l_orderkey", ">", 2 ** 53 + 1)],
+        [("l_orderkey", "<", 2 ** 63 + 5)],
+        [("l_orderkey", "=", -(2 ** 64))],
+        [("l_extendedprice", "<", 2 ** 53 + 1)],
+        [("l_quantity", ">", 2 ** 53 + 1)],
+        [("l_quantity", "<=", -(2 ** 60) - 1)],
+        [("l_quantity", "in", [2 ** 60 + 1, 5])],
+        # None literals
+        [("l_orderkey", "=", None)],
+        [("l_quantity", ">", None)],
+        [("l_returnflag", "in", [None, "A"])],
+        # mixed int/str IN
+        [("l_orderkey", "in", [1, "x"])],
+        [("l_orderkey", "in", ["x", -5])],
+        [("l_returnflag", "in", ["A", 1])],
+        # bool literals
+        [("l_orderkey", "=", True)],
+        [("l_quantity", ">", False)],
+        [("l_discount", "<=", True)],
+        [("l_returnflag", "=", True)],
     ]
     for _ in range(30):
         lo = rng.randint(0, 5000)
@@ -158,13 +188,14 @@ def test_kernel_sample_files_equal(spark, tmp_table):
     qt, _li = _clone_fmt2(spark, tmp_table)
     snap = qt.snapshot(refresh=True)
     assert getattr(snap.files, "kernel", None) is not None
-    for f in (0.01, 0.1, 0.5, 1.0):
-        kern = set(qt.sample_files(f, snap=snap))
-        # object path: same snapshot, materialized
-        mat = CommitLog(tmp_table).snapshot()
-        mat.files = {p: x for p, x in mat.files.items()}
-        obj = set(qt.sample_files(f, snap=mat))
-        assert kern == obj
+    # object path: same snapshot, materialized
+    mat = CommitLog(tmp_table).snapshot()
+    mat.files = {p: x for p, x in mat.files.items()}
+    for f, lb in ((0.01, 0.0), (0.1, 0.0), (0.5, 0.0), (1.0, 0.0),
+                  (0.1, 0.05), (0.5, 0.2), (1.0, 0.5), (0.3, 0.29)):
+        kern = set(qt.sample_files(f, lb, snap=snap))
+        obj = set(qt.sample_files(f, lb, snap=mat))
+        assert kern == obj, (f, lb)
 
 
 def test_lazy_files_contract(spark, tmp_table):
@@ -359,6 +390,42 @@ def test_kernel_nan_and_half_null_stats_never_prune(spark, tmp_path):
     # the materialized objects also drop the unusable pairs
     assert "x" not in (k.get("a.parquet").column_stats or {})
     assert "y" not in (k.get("b.parquet").column_stats or {})
+
+
+def test_kernel_stats_compare_exactly_beyond_2_53(tmp_path):
+    """Base-lane stats skipping compares int/float pairs with Python's
+    exact semantics, like the object lane: near 2^53 NumPy's float64
+    rounding would keep files the object lane prunes."""
+    import pyarrow.parquet as pq
+
+    from qbeast_spark_spark.core.revision import ColumnToIndex, Revision
+    from qbeast_spark_spark.core.transform import LinearTransformation
+    from qbeast_spark_spark.sources.log import Block, IndexFile, Snapshot
+    from qbeast_spark_spark.sources.metadata import _files_arrow_table
+
+    big = 2 ** 53
+    blocks = [Block("0:0", 0, 2 ** 30, 10)]
+    files = {
+        "i.parquet": IndexFile("i.parquet", 1, 10, 1, blocks,
+                               {"n": [big + 1, big + 3]}),
+        "f.parquet": IndexFile("f.parquet", 1, 10, 1, blocks,
+                               {"x": [float(big), float(big)]}),
+    }
+    fp = str(tmp_path / "files.parquet")
+    pq.write_table(_files_arrow_table(files, None), fp)
+    rev = Revision(1, 0, 100, [ColumnToIndex("z", "")],
+                   [LinearTransformation(0.0, 1.0)], ["double"])
+    ksnap, osnap = Snapshot(str(tmp_path)), Snapshot(str(tmp_path))
+    ksnap.files = LazyFiles(FileKernel.from_parquet(fp))
+    osnap.files = files
+    ksnap.revisions = osnap.revisions = {1: rev}
+    for filt in ([("n", "=", float(big))], [("n", "in", [float(big)])],
+                 [("x", "=", big + 1)], [("x", "<", big - 1)],
+                 [("n", "<", float(big + 2))], [("x", ">=", big + 1)]):
+        assert prune_files(ksnap, filt) == prune_files(osnap, filt), filt
+    # and the exact answers: both '=' probes prove their file empty
+    assert prune_files(ksnap, [("n", "=", float(big))]) == ["f.parquet"]
+    assert prune_files(ksnap, [("x", "=", big + 1)]) == ["i.parquet"]
 
 
 def test_format2_partial_sync_falls_back_to_replay(spark, tmp_table):
@@ -631,3 +698,33 @@ def test_vacuum_dv_liveness_on_kernel_snapshot(spark, tmp_table):
     assert not (set(dv_files) & set(victims)), \
         "vacuum would delete a live DV sidecar"
     assert qt.to_df().count() == before - out["rows_deleted"]
+
+
+def test_pyds_fraction_builds_only_kept_files(spark, tmp_table):
+    """option("fraction") planning on a columnar snapshot selects files
+    off the block-weight arrays (the shared reader.sample_files) and
+    builds an IndexFile only for the files it plans — not one per live
+    file — and plans exactly QbeastTable.sample_files' selection."""
+    from unittest.mock import patch
+
+    from qbeast_spark_spark.sources.pyds import QbeastBatchReader
+
+    qt, _li = _clone_fmt2(spark, tmp_table)
+    built = []
+    build = FileKernel._build
+
+    def counting_build(self, i):
+        built.append(i)
+        return build(self, i)
+
+    with patch.object(FileKernel, "_build", counting_build):
+        parts = QbeastBatchReader(tmp_table, {"fraction": "0.01"},
+                                  None).partitions()
+    assert parts, "a 1% sample plans at least one file"
+    assert len(built) <= len(parts), (len(built), len(parts))
+    keys = list(CommitLog(tmp_table).snapshot().files.keys())
+    assert len(parts) < len(keys)
+    # the planned files, in snapshot key order (partition order)
+    planned = [os.path.relpath(p.abs_path, tmp_table) for p in parts]
+    sampled = set(qt.sample_files(0.01))
+    assert planned == [k for k in keys if k in sampled]

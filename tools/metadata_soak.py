@@ -12,15 +12,16 @@ query/DML pays:
 - snapshot construction (checkpoint seed + post-checkpoint replay)
 - selective prune_files (the read path's planning step)
 - worst-case prune_files (keep-everything predicate)
+- sample_files at 1% and 10% (the sampling read path's planning step)
 - checkpoint write + driver RSS
 
 Each size runs in a SUBPROCESS so RSS numbers are clean. Output: one
 JSON line per size; run with --md to print a SCALE.md-ready table.
 
 The fabricated layout mirrors a real table: one 2-dim linear revision,
-files in breadth-first cube order (1-2 blocks each), per-file
-column-stats boxes derived from the cube region, per-commit cubeWeights
-and cubeDomains, ~N_COMMITS commits with a checkpoint at the last
+files in breadth-first cube order (1-2 blocks each, weights growing
+with depth), per-file column-stats boxes derived from the cube region,
+per-commit cubeWeights and cubeDomains, ~N_COMMITS commits with a checkpoint at the last
 multiple of CHECKPOINT_INTERVAL (so replay = seed + a few JSON tails),
 a sprinkle of remove+re-add rewrites, and DV descriptors on ~1% of
 files.
@@ -74,6 +75,20 @@ def _cube_region(depth: int, path: int, dims: int = 2):
     return frm, [f + side for f in frm]
 
 
+def _depth_weights(depth: int, n_files: int, dims: int = 2):
+    """(min, max) block weight of a cube at ``depth``: an OTree's
+    weights grow with depth, so the range spans the fraction of files
+    above this level to the fraction through it, and a fraction-f
+    sample keeps about the shallowest f of the files."""
+    from qbeast_spark_spark.core.weight import fraction_to_weight
+
+    fanout = 1 << dims
+    above = (fanout ** depth - 1) // (fanout - 1)
+    through = above + fanout ** depth
+    return (fraction_to_weight(min(1.0, above / n_files)),
+            fraction_to_weight(min(1.0, through / n_files)))
+
+
 def generate(table: str, n_files: int, fmt: str = "json") -> None:
     """Fabricate a commit log with ``n_files`` live files under
     ``table``/_qbeast_log, shaped like a real ingest history."""
@@ -107,12 +122,12 @@ def generate(table: str, n_files: int, fmt: str = "json") -> None:
             depth, path = _bfs_cube(fid)
             frm, to = _cube_region(depth, path)
             cube = f"{depth}:{path:x}"
-            blocks = [Block(cube, 0, int((depth + 1) * 2 ** 28),
-                            5_000_000)]
+            lo, hi = _depth_weights(depth, n_files)
+            blocks = [Block(cube, lo, hi, 5_000_000)]
             if fid % 3 == 0 and depth > 0:     # rollup: parent tail block
                 pd_, pp = depth - 1, path & ((1 << (2 * (depth - 1))) - 1)
-                blocks.append(Block(f"{pd_}:{pp:x}", 0,
-                                    int(depth * 2 ** 28), 250_000))
+                blocks.append(Block(f"{pd_}:{pp:x}",
+                                    *_depth_weights(pd_, n_files), 250_000))
             f = IndexFile(
                 path=f"{uuid.uuid5(uuid.NAMESPACE_URL, str(fid)).hex}.parquet",
                 size=120 << 20, rows=5_250_000, revision_id=1,
@@ -123,7 +138,7 @@ def generate(table: str, n_files: int, fmt: str = "json") -> None:
                      "offset": 1, "sizeInBytes": 40, "cardinality": 1000}
                     if fid % 100 == 7 else None))
             adds.append(f)
-            weights[cube] = int((depth + 1) * 2 ** 28)
+            weights[cube] = hi
             domains[cube] = 5_000_000.0
             fid += 1
         removes = []
@@ -169,7 +184,7 @@ def generate(table: str, n_files: int, fmt: str = "json") -> None:
 def measure_one(n_files: int, keep: str = None,
                 fmt: str = "json") -> dict:
     from qbeast_spark_spark.sources.log import CommitLog
-    from qbeast_spark_spark.sources.reader import prune_files
+    from qbeast_spark_spark.sources.reader import prune_files, sample_files
 
     table = keep or tempfile.mkdtemp(prefix=f"qmeta_{n_files}_")
     out = {"files": n_files, "format": fmt}
@@ -200,6 +215,11 @@ def measure_one(n_files: int, keep: str = None,
     kept_all = prune_files(snap, [("x", ">=", 0.0)])
     out["prune_keepall_s"] = round(time.perf_counter() - t0, 3)
     out["prune_keepall_kept"] = len(kept_all)
+    for pct in (1, 10):
+        t0 = time.perf_counter()
+        sampled = sample_files(snap, pct / 100.0)
+        out[f"sample_{pct}pct_s"] = round(time.perf_counter() - t0, 3)
+        out[f"sample_{pct}pct_kept"] = len(sampled)
 
     # auto_maintain's policy threshold check (maintenance.py): on a
     # kernel-backed snapshot this must be O(arrays), never the
@@ -264,6 +284,7 @@ def main():
         cols = ["files", "format", "live_files", "log_mb", "snapshot_s",
                 "rss_delta_mb", "prune_selective_s",
                 "prune_selective_kept", "prune_keepall_s",
+                "sample_1pct_s", "sample_10pct_s",
                 "checkpoint_write_s", "checkpoint_seed_s",
                 "dml_scan_proxy_s"]
         print("| " + " | ".join(cols) + " |")
