@@ -131,14 +131,15 @@ def quantized_topk(vectors, queries, k: int = 5,
     float step (widen, amax, /127 scale, floor-quantize, sqrt, the
     ((dot*sa)*sb) / ((sqrt(ii)*sa)*(sqrt(jj)*sb)) association) is the
     same IEEE-double op sequence NumPy applies elementwise, and
-    zero-norm vectors/queries yield NULL cosines (non-ANSI Divide
-    semantics: ranked last, never a NaN that would sort as a spurious
-    top-1; under Spark 4's default ANSI mode the expression lane raises
-    DIVIDE_BY_ZERO on such inputs instead), and NaN embedding values —
-    which poison the float chain to NaN cosines in BOTH lanes and which
-    Spark ranks ABOVE every double — are forwarded as unconditional
-    top-k candidates in window id order, so the lanes agree on them
-    too. Ragged query dims, an empty query set, non-integer ids, or an
+    a pair whose norm product is zero (a zero-norm vector or query)
+    yields a NULL cosine (non-ANSI Divide semantics: ranked last, never
+    a NaN that would sort as a spurious top-1; under Spark 4's default
+    ANSI mode the expression lane raises DIVIDE_BY_ZERO on such inputs
+    instead), and NaN embedding values — which poison the float chain
+    to NaN cosines in BOTH lanes, also against a zero-norm side, whose
+    norm product is then NaN, not zero, and which Spark ranks ABOVE
+    every double — are forwarded as unconditional top-k candidates in
+    window id order, so the lanes agree on them too. Ragged query dims, an empty query set, non-integer ids, or an
     over-large query side fall back to the expression plan."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -212,19 +213,19 @@ def quantized_topk(vectors, queries, k: int = 5,
                 vn = np.sqrt((v8 * v8).sum(axis=1).astype(np.float64)) * s
                 dot = v8 @ qq8.T                       # exact int64
                 with np.errstate(invalid="ignore", divide="ignore"):
+                    div = (vn[:, None]) * (qn[None, :])
                     cos = ((dot.astype(np.float64) * s[:, None])
-                           * qs[None, :]) \
-                        / ((vn[:, None]) * (qn[None, :]))
-                # zero-norm rows/queries: Spark's Divide yields NULL
-                # (desc NULLS LAST); emit nulls, never 0/0 = NaN, which
-                # Spark would rank ABOVE every real cosine
-                vzero = vn == 0.0
-                valid = np.flatnonzero(~vzero)
-                has_nan = bool(np.isnan(cos[valid, :]).any()) \
-                    if valid.size else False
-                nulls_by_id = None
+                           * qs[None, :]) / div
+                # Spark's Divide: a zero divisor (a zero-norm row or
+                # query) yields NULL (desc NULLS LAST) — emit nulls,
+                # never 0/0 = NaN, which Spark would rank ABOVE every
+                # real cosine. A NaN divisor is not zero: a NaN
+                # embedding against a zero-norm side gives a NaN
+                # cosine, as in the expression lane
+                null = div == 0.0
+                nan = np.isnan(cos) & ~null
                 order = None
-                if vzero.any() or (qn == 0.0).any() or has_nan:
+                if null.any() or nan.any():
                     # candidate rows in the window's id-asc tie-break
                     # order among equal (NULL-cos or NaN-cos) keys:
                     # Spark's asc is NULLS FIRST, so null ids must sort
@@ -233,62 +234,44 @@ def quantized_topk(vectors, queries, k: int = 5,
                         pc.sort_indices(ids_arr,
                                         null_placement="at_start"),
                         dtype=np.int64)
-                    nulls_by_id = order[vzero[order]][:k]
-                    all_by_id = order[:k]
                 sel_idx, sel_vals, sel_null, counts = [], [], [], []
                 for j in range(kq):
-                    if qn[j] == 0.0:
-                        idx = all_by_id      # whole column is NULL
-                        vals = np.full(idx.size, np.nan)
-                        nul = np.ones(idx.size, dtype=bool)
+                    null_j, nan_j = null[:, j], nan[:, j]
+                    valid_j = np.flatnonzero(~(null_j | nan_j))
+                    vals_v = cos[valid_j, j]
+                    if vals_v.size > k > 0:
+                        kth = np.partition(
+                            vals_v, vals_v.size - k)[vals_v.size - k]
+                        keep = vals_v >= kth - _TOPK_ROUND_GUARD
+                        idx = valid_j[keep]
+                        vals = vals_v[keep]
                     else:
-                        vals_v = cos[valid, j]
+                        idx = valid_j
+                        vals = vals_v
+                    nul = np.zeros(idx.size, dtype=bool)
+                    if nan_j.any():
                         # NaN cosines (NaN embedding values poison the
                         # float chain in BOTH lanes) sort ABOVE every
                         # double in Spark: they are unconditional top-k
                         # candidates, forwarded in window id order —
                         # `>= kth - guard` is False for NaN, so the
-                        # value selection below would silently drop
+                        # value selection above would silently drop
                         # rows the global window ranks FIRST
-                        nan_keep = None
-                        nanm = np.isnan(vals_v)
-                        if nanm.any():
-                            nan_full = np.zeros(n, dtype=bool)
-                            nan_full[valid[nanm]] = True
-                            nan_keep = order[nan_full[order]][:k]
-                            valid_j = valid[~nanm]
-                            vals_v = vals_v[~nanm]
-                        else:
-                            valid_j = valid
-                        if vals_v.size > k > 0:
-                            kth = np.partition(
-                                vals_v, vals_v.size - k)[vals_v.size - k]
-                            keep = vals_v >= kth - _TOPK_ROUND_GUARD
-                            idx = valid_j[keep]
-                            vals = vals_v[keep]
-                        else:
-                            idx = valid_j
-                            vals = vals_v
-                        nul = np.zeros(idx.size, dtype=bool)
-                        if nan_keep is not None and nan_keep.size:
-                            idx = np.concatenate([nan_keep, idx])
-                            vals = np.concatenate(
-                                [np.full(nan_keep.size, np.nan), vals])
-                            nul = np.concatenate(
-                                [np.zeros(nan_keep.size, dtype=bool),
-                                 nul])
-                        if idx.size < k and nulls_by_id is not None \
-                                and nulls_by_id.size:
-                            # short column: NULL rows can reach the
-                            # global top-k — forward the k smallest-id
-                            # zero-norm rows as well
-                            idx = np.concatenate([idx, nulls_by_id])
-                            vals = np.concatenate(
-                                [vals,
-                                 np.full(nulls_by_id.size, np.nan)])
-                            nul = np.concatenate(
-                                [nul,
-                                 np.ones(nulls_by_id.size, dtype=bool)])
+                        nan_keep = order[nan_j[order]][:k]
+                        idx = np.concatenate([nan_keep, idx])
+                        vals = np.concatenate(
+                            [np.full(nan_keep.size, np.nan), vals])
+                        nul = np.concatenate(
+                            [np.zeros(nan_keep.size, dtype=bool), nul])
+                    if idx.size < k and null_j.any():
+                        # short column: NULL rows can reach the global
+                        # top-k — forward the k smallest-id ones as well
+                        null_keep = order[null_j[order]][:k]
+                        idx = np.concatenate([idx, null_keep])
+                        vals = np.concatenate(
+                            [vals, np.full(null_keep.size, np.nan)])
+                        nul = np.concatenate(
+                            [nul, np.ones(null_keep.size, dtype=bool)])
                     sel_idx.append(idx)
                     sel_vals.append(vals)
                     sel_null.append(nul)

@@ -132,14 +132,18 @@ def _rewrite(qt, snap, matched: List[str], replacement,
              staged=None, operation: str = "WRITE",
              cdc: Optional[List[Dict[str, Any]]] = None,
              read_files: Optional[List[str]] = None,
-             txn: Optional[Dict[str, Any]] = None) -> int:
+             txn: Optional[Dict[str, Any]] = None,
+             rows: Optional[int] = None) -> int:
     """Write ``replacement`` (the new contents of ``matched`` files)
     through the index pipeline against the existing cube weights, and
     commit adds + removes in one version. Mirrors optimize_table's
     re-layout (IndexedTable.scala:399-552 analogue) with dataChange=True.
     ``staged`` rows (e.g. merge inserts outside the revision space) are
     written as staging (revision 0) files inside the SAME commit —
-    readable immediately, indexed by the next optimize()."""
+    readable immediately, indexed by the next optimize(). ``rows`` bounds
+    the replacement's row count for the writer's driver-lane guard;
+    None means the matched files' live rows (a replacement that only
+    drops or edits their rows)."""
     from ..core.revision import STAGING_REVISION_ID, Revision
     import time as _time
 
@@ -180,8 +184,10 @@ def _rewrite(qt, snap, matched: List[str], replacement,
                           read_version=snap.version,
                           read_files=read_files or matched, txn=txn)
 
+    if rows is None:
+        rows = sum(f.live_rows for f in selected)
     add, weights_payload = _indexed_adds(qt, snap, rev, replacement,
-                                         selected)
+                                         selected, rows=rows)
     return log.commit(
         add=add + extra_add,
         remove=matched,
@@ -198,14 +204,15 @@ def _rewrite(qt, snap, matched: List[str], replacement,
 
 
 def _indexed_adds(qt, snap, rev, replacement, selected,
-                  scale: float = 1.0):
+                  scale: float = 1.0, rows: Optional[int] = None):
     """Index ``replacement`` rows through the EXISTING cube weights of
     ``rev`` and write them as new data files (no commit). Returns
     ``(add_entries, cube_weights_payload)``. ``selected`` (the matched
     files' entries) sizes the rollup from their stored block counts;
     ``scale`` shrinks those counts when the replacement holds only a
     fraction of the files' rows (the merge-on-read append path, where
-    only the changed rows are written)."""
+    only the changed rows are written). ``rows`` (an upper bound on the
+    replacement's row count, None = unknown) picks the writer's lane."""
     from ..index.analyzer import compute_rollup_from_counts
 
     bloom_cols = sorted({c for f in selected for c in (f.blooms or {})})
@@ -229,7 +236,7 @@ def _indexed_adds(qt, snap, rev, replacement, selected,
     file_map = _complete_file_map(weights.keys(), rollup, rev.dims)
     num_files = max(1, len(set(rollup.values())))
     add = _materialize(prepared, rev, weights, file_map, num_files, qt.path,
-                       bloom_cols=tuple(bloom_cols))
+                       bloom_cols=tuple(bloom_cols), rows=rows)
     payload = {_cube_str(d, p): int(w) for (d, p), w in weights.items()}
     return add, payload
 
@@ -673,14 +680,16 @@ def _dv_mask_adds(qt, snap, matched: List[str], hits):
 def _mor_commit(qt, snap, matched: List[str], hits, post, operation: str,
                 cdc=None, staged=None, read_files=None,
                 scale: float = 1.0,
-                txn: Optional[Dict[str, Any]] = None) -> int:
+                txn: Optional[Dict[str, Any]] = None,
+                rows: Optional[int] = None) -> int:
     """Merge-on-read commit (Delta's DV-backed UPDATE/MERGE shape): mask
     the matched rows of ``matched`` files via deletion vectors and append
     only the replacement rows ``post`` as new indexed files — one atomic
     version, NO data-file rewrite. Write amplification drops from
     O(matched files' bytes) to O(changed rows); readers anti-join the
     bitmaps until ``optimize()`` compacts them away. ``staged`` rows (out
-    of the revision space) land in the staging lane of the SAME commit."""
+    of the revision space) land in the staging lane of the SAME commit.
+    ``rows`` bounds ``post``'s row count (see ``_indexed_adds``)."""
     from ..core.revision import STAGING_REVISION_ID, Revision
     import time as _time
 
@@ -694,7 +703,8 @@ def _mor_commit(qt, snap, matched: List[str], hits, post, operation: str,
         if post is not None:
             selected = [snap.files[rel] for rel in matched]
             new_adds, payload = _indexed_adds(qt, snap, rev, post,
-                                              selected, scale=scale)
+                                              selected, scale=scale,
+                                              rows=rows)
             add += new_adds
             cube_weights = {rev.revision_id: payload}
     elif post is not None:
@@ -853,7 +863,7 @@ def update_rows(spark, path: str, assignments: Dict[str, Any],
                     _raw_positions(qt, matched).where(pred))
             version = _mor_commit(qt, snap, matched, hits, post, "UPDATE",
                                   cdc=cdc, scale=n_upd / max(live, 1),
-                                  txn=txn)
+                                  txn=txn, rows=n_upd)
             return {"version": version, "rows_updated": n_upd,
                     "files_rewritten": 0, "files_dv": len(matched),
                     "files_scanned": len(candidates)}
@@ -1237,6 +1247,10 @@ def merge_rows(spark, path: str, source, on,
         if inserts is not None and n_ins:
             cdc_frames.append((inserts, "insert"))
         cdc = _cdc_of(qt, snap, cdc_frames)
+        # replacement rows: the post-images (dv) or the matched files'
+        # live rows (rewrite), plus the in-space inserts
+        rows = (n_matched if mode == "dv" else live) + \
+            (n_ins if staged is None else 0)
         if mode == "dv":
             # matched rows are masked where they sit; the mask positions
             # come from the SAME persisted pass-1 frame that produced the
@@ -1249,11 +1263,13 @@ def merge_rows(spark, path: str, source, on,
             version = _mor_commit(qt, snap, matched, hits, replacement,
                                   "MERGE", cdc=cdc, staged=staged,
                                   read_files=list(snap.files.keys()),
-                                  scale=n_matched / max(live, 1), txn=txn)
+                                  scale=n_matched / max(live, 1), txn=txn,
+                                  rows=rows)
         else:
             version = _rewrite(qt, snap, matched, replacement, staged=staged,
                                read_files=list(snap.files.keys()),
-                               operation="MERGE", cdc=cdc, txn=txn)
+                               operation="MERGE", cdc=cdc, txn=txn,
+                               rows=rows)
         return {"version": version,
                 "files_rewritten": 0 if mode == "dv" else len(matched),
                 **({"files_dv": len(matched)} if mode == "dv" else {}),

@@ -23,13 +23,13 @@ from ..index.analyzer import (
     WEIGHT_COL,
     compute_cube_weights,
     compute_rollup_from_counts,
-    estimate_cube_domains,
     with_index_columns,
 )
 from .log import Block, CommitLog, IndexFile
 from .writer import (
     _build_transformations,
     _complete_file_map,
+    _cube_domains,
     _cube_str,
     _materialize,
     _parse_cube,
@@ -117,8 +117,7 @@ def optimize_table(spark, path: str, fraction: float = 1.0,
                        cube_size or snap_default_cube_size(snap),
                        specs, transformations, column_types)
         prepared = with_index_columns(df, rev)
-        domains = estimate_cube_domains(prepared, rev, n,
-                                        sample_fraction=analyze_fraction)
+        domains = _cube_domains(prepared, rev, n, analyze_fraction)
         weights = compute_cube_weights(domains, rev.desired_cube_size, rev.dims)
         counts = {k: float(v) for k, v in domains.items()}
     else:
@@ -149,8 +148,11 @@ def optimize_table(spark, path: str, fraction: float = 1.0,
     # filters for every column the selected files had one for
     bloom_cols = sorted({c for f in selected
                          for c in (f.blooms or {})})
+    # the selected files' stored rows bound the rewrite's input (their
+    # block counts include rows a deletion vector hides)
     add = _materialize(prepared, rev, weights, file_map, num_files, path,
-                       bloom_cols=tuple(bloom_cols))
+                       bloom_cols=tuple(bloom_cols),
+                       rows=sum(b.count for f in selected for b in f.blocks))
     return log.commit(
         add=add,
         remove=[f.path for f in selected],

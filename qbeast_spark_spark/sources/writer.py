@@ -14,7 +14,26 @@ job 3  cube assignment -> repartition by   — mapInArrow (NumPy), shuffle on
 
 The only full-data shuffle is the rollup repartition — identical to the
 reference (RollupDataWriter.scala:67). Driver state is O(#cubes), never
-O(rows); broadcast state is the level map (a few numpy arrays).
+O(rows) outside the bounded driver lane below; broadcast state is the
+level map (a few numpy arrays).
+
+Driver lane, for a batch of at most ``min(cube size,
+DRIVER_MAX_WRITE_ROWS)`` rows (small appends, DML post-images, stream
+micro-batches):
+
+job 1  column stats                        — as above
+driver no sketch: one cube's domain is     — what simulate_domains returns
+       {root: n}                             for n <= group cube size
+job 2  collect the prepared rows           — ONE Arrow collect; the JVM still
+                                             computes weights + coordinates
+driver assign + parquet writing            — the same closures, over rows
+                                             sorted in the distributed
+                                             lane's (file, depth, path,
+                                             weight) order
+
+Same files and Block stats as the distributed lane, without the sketch,
+spread and repartition stages. Above the guard the distributed pipeline
+is the one fallback.
 """
 
 from __future__ import annotations
@@ -40,6 +59,7 @@ from ..core.transform import (
     numeric_view,
     transformer_for_type,
 )
+from ..index import analyzer as _analyzer
 from ..index.analyzer import (
     NORM_PREFIX,
     WEIGHT_COL,
@@ -56,6 +76,12 @@ __all__ = ["write_qbeast"]
 FILE_COL = "_qbeast_file"
 DEPTH_COL = "_qbeast_cube_depth"
 PATH_COL = "_qbeast_cube_path"
+
+# Driver-lane row cap: a batch no larger than min(cube size, this) is
+# indexed and written on the driver (module docstring). Bounds driver
+# memory when the table's cube size is the 5M default — the same cap and
+# idiom as embeddings.DRIVER_MAX_QUERY_ROWS.
+DRIVER_MAX_WRITE_ROWS = 65_536
 
 _META_SCHEMA = ("file string, col_stats string, blooms string, "
                 "cube_depth int, cube_path long, min_weight long, "
@@ -322,10 +348,32 @@ def _make_write_fn(table_path: str, helper_cols: List[str],
     return write
 
 
+def _driver_lane(revision: Revision, rows: Optional[int]) -> bool:
+    """The one write-path guard: ``rows`` (a known count or an upper
+    bound; None = unknown) fits in one cube and under the driver cap."""
+    return rows is not None and \
+        rows <= min(revision.desired_cube_size, DRIVER_MAX_WRITE_ROWS)
+
+
+def _cube_domains(prepared, revision: Revision, n: int,
+                  sample_fraction: Optional[float] = None
+                  ) -> Dict[Tuple[int, int], float]:
+    """Job 2, or its known answer: a driver-lane batch is one cube, so the
+    sketch would return ``{root: n}`` — skip it (and leave no stale
+    sketch fraction behind)."""
+    if _driver_lane(revision, n):
+        _analyzer.LAST_SKETCH_FRACTION = None
+        return {(0, 0): float(n)}
+    return estimate_cube_domains(prepared, revision, n,
+                                 sample_fraction=sample_fraction)
+
+
 def _materialize(prepared, revision: Revision, weights, file_map, num_files,
                  path: str, bloom_cols: Tuple[str, ...] = (),
-                 bloom_bits: int = 16384) -> List[IndexFile]:
-    """Job 3: assign -> shuffle on rollup id -> per-task parquet writing.
+                 bloom_bits: int = 16384,
+                 rows: Optional[int] = None) -> List[IndexFile]:
+    """Job 3: assign -> shuffle on rollup id -> per-task parquet writing,
+    or the driver lane when ``rows`` passes the guard (module docstring).
     Returns the IndexFile list (with Block stats) for the commit."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -333,9 +381,39 @@ def _materialize(prepared, revision: Revision, weights, file_map, num_files,
     dims = revision.dims
     level_map = LevelMap.build(weights, file_map)
     norm_cols = [f"{NORM_PREFIX}{i}" for i in range(dims)]
-    passthrough = [f.name for f in prepared.schema.fields
-                   if f.name not in norm_cols]
     out_fields = [f for f in prepared.schema.fields if f.name not in norm_cols]
+    passthrough = [f.name for f in out_fields]
+    assign_fn = _make_assign_fn(level_map, dims, norm_cols,
+                                passthrough + [FILE_COL, DEPTH_COL, PATH_COL])
+    helper_cols = [WEIGHT_COL, FILE_COL, DEPTH_COL, PATH_COL]
+    write_fn = _make_write_fn(path, helper_cols, tuple(bloom_cols),
+                              bloom_bits)
+
+    if _driver_lane(revision, rows):
+        import pyarrow as pa
+
+        # _collect_as_arrow, not toArrow(): toArrow casts session-zone
+        # timestamps to UTC, and the files must carry the same Arrow
+        # schema the mapInArrow workers see
+        tbl = pa.Table.from_batches(
+            prepared._collect_as_arrow(empty_list_if_zero_records=False))
+        if tbl.num_rows == 0:
+            return []
+        # assign's from_arrays output is all-nullable; the JVM hands the
+        # distributed write stage the declared (not-null) flags, and the
+        # files carry them
+        schema = pa.schema([tbl.schema.field(c) for c in passthrough] + [
+            pa.field(FILE_COL, pa.int64()), pa.field(DEPTH_COL, pa.int32()),
+            pa.field(PATH_COL, pa.int64())])
+        assigned = pa.Table.from_batches(
+            list(assign_fn(tbl.to_batches()))).cast(schema)
+        ordered = assigned.sort_by([(c, "ascending") for c in
+                                    (FILE_COL, DEPTH_COL, PATH_COL,
+                                     WEIGHT_COL)])
+        meta = [r for b in write_fn(ordered.to_batches())
+                for r in b.to_pylist()]
+        return _index_files(meta, revision)
+
     assign_schema = T.StructType(
         out_fields + [T.StructField(FILE_COL, T.LongType()),
                       T.StructField(DEPTH_COL, T.IntegerType()),
@@ -346,19 +424,18 @@ def _materialize(prepared, revision: Revision, weights, file_map, num_files,
     # splits, which would serialize cube assignment on as many cores; at
     # real scale inputs already have >= defaultParallelism splits and this
     # is a no-op (no extra shuffle in 100 TB plans).
-    assigned = spread(prepared).mapInArrow(
-        _make_assign_fn(level_map, dims, norm_cols,
-                        passthrough + [FILE_COL, DEPTH_COL, PATH_COL]),
-        assign_schema)
-
-    helper_cols = [WEIGHT_COL, FILE_COL, DEPTH_COL, PATH_COL]
+    assigned = spread(prepared).mapInArrow(assign_fn, assign_schema)
     meta = (
         assigned.repartition(num_files, F.col(FILE_COL))
         .sortWithinPartitions(FILE_COL, DEPTH_COL, PATH_COL, WEIGHT_COL)
-        .mapInArrow(_make_write_fn(path, helper_cols, tuple(bloom_cols),
-                                   bloom_bits), _META_SCHEMA)
+        .mapInArrow(write_fn, _META_SCHEMA)
         .collect()
     )
+    return _index_files(meta, revision)
+
+
+def _index_files(meta, revision: Revision) -> List[IndexFile]:
+    """Write-kernel meta rows (one per file x cube) -> IndexFile list."""
     import json as _json
 
     by_file: Dict[str, IndexFile] = {}
@@ -646,9 +723,9 @@ def _write_qbeast_inner(df, path: str, columns_to_index,
 
     # -- job 2: domains; driver: weights + rollup ---------------------------
     _t0 = time.perf_counter()
-    new_domains = estimate_cube_domains(prepared, revision, n,
-                                        sample_fraction=analyze_fraction)
-    LAST_WRITE_PHASES["domains"] = time.perf_counter() - _t0
+    new_domains = _cube_domains(prepared, revision, n, analyze_fraction)
+    LAST_WRITE_PHASES["domains"] = (0.0 if _driver_lane(revision, n)
+                                    else time.perf_counter() - _t0)
     existing_domains = {
         _parse_cube(c): d
         for c, d in snapshot.cube_domains.get(revision.revision_id, {}).items()
@@ -671,7 +748,7 @@ def _write_qbeast_inner(df, path: str, columns_to_index,
     add_files = _materialize(prepared, revision, weights, file_map,
                              num_files, path,
                              bloom_cols=tuple(bloom_columns or ()),
-                             bloom_bits=bloom_bits)
+                             bloom_bits=bloom_bits, rows=int(n))
     LAST_WRITE_PHASES["materialize"] = time.perf_counter() - _t0
     remove = pre_existing_files if mode == "overwrite" else []
 

@@ -276,3 +276,22 @@ class TestAutoSketchPolicy:
         # 1.0 = documented opt-out: exact pass even above the threshold
         self._write(spark, str(tmp_path / "optout"), fraction=1.0)
         assert A.LAST_SKETCH_FRACTION is None
+
+
+def test_one_cube_sketch_is_the_root_domain():
+    """The writer's driver lane skips the domain sketch for a batch of at
+    most one cube and commits ``{root: n}`` instead (writer._cube_domains).
+    That is exact only while the kernel keeps every batch of
+    ``n <= group_cube_size`` rows in the root, and subdivides one row
+    later — pin both sides of the boundary."""
+    gcs = 50
+    for dims in (1, 2, 3):
+        pts, ws = _random_data(n=gcs + 1, dims=dims, seed=dims)
+        assert simulate_domains(pts[:0], ws[:0], gcs, dims, 10) == []
+        for n in range(1, gcs + 1):
+            assert simulate_domains(pts[:n], ws[:n], gcs, dims, 10) == \
+                [(0, 0, n)], (dims, n)
+        out = simulate_domains(pts, ws, gcs, dims, 10)
+        assert out[0] == (0, 0, gcs + 1)
+        assert [d for d, _, _ in out[1:]] == [1], out
+        assert out[1][2] == 1        # the one overflow row reaches a child

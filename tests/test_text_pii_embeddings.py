@@ -760,6 +760,74 @@ def test_quantized_topk_nan_embeddings_rank_first_both_lanes(spark):
     assert got9 == [1, 2], got9
 
 
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_quantized_topk_nan_against_zero_norm_both_lanes(spark, ansi):
+    """ADVICE r12: a NaN embedding against a zero-norm vector or query
+    has norm product NaN * 0 = NaN, not 0 — Spark's Divide returns a
+    NaN cosine (ranked FIRST), not the NULL of a zero divisor. The
+    kernel must forward those NaNs (it used to emit the zero-norm
+    query's whole column, and every zero-norm row, as NULL). Under ANSI
+    a zero divisor raises in the expression lane, so that run keeps
+    every pair's norm product non-zero."""
+    import math
+
+    from pyspark.sql import Window
+
+    from qbeast_spark_spark.operators.embeddings import (
+        _quantized_pairs_exprs, quantized_topk)
+
+    nan, z = float("nan"), [0.0, 0.0]
+    zero_vecs = [(1, z), (2, z)]
+    nan_vecs = [(100, [nan, 1.0]), (101, [nan, 2.0])]
+    real = [(i, [1.0, i / 10.0]) for i in range(10, 15)]
+    nan_q, zero_q = (8, [nan, 1.0]), (9, z)
+    if ansi == "false":
+        cases = [(zero_vecs + nan_vecs + real,
+                  [(0, [1.0, 0.5]), nan_q, zero_q])]
+        want = {8: [1, 2, 10], 9: [100, 101, 1]}
+    else:
+        cases = [(zero_vecs + nan_vecs, [nan_q]), (nan_vecs, [zero_q])]
+        want = {8: [1, 2, 100], 9: [100, 101]}
+
+    def norm(r):            # NaN != NaN: map to a comparable sentinel
+        c = r["cos"]
+        c = "NaN" if isinstance(c, float) and math.isnan(c) else c
+        return (r["q_id"], r["vec_id"], c, r["rank"])
+
+    keys = ("spark.sql.ansi.enabled",
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    got = {}
+    try:
+        spark.conf.set(keys[0], ansi)
+        spark.conf.set(keys[1], "3")   # small batches: selection drops rows
+        for rows, queries in cases:
+            vecs = spark.createDataFrame(
+                rows, "vec_id long, embedding array<double>")
+            q = spark.createDataFrame(
+                queries, "q_id long, q_embedding array<double>")
+            new = quantized_topk(vecs, q, k=3).collect()
+            pairs = _quantized_pairs_exprs(vecs, q, "embedding", "vec_id",
+                                           "q_id", "q_embedding")
+            w = Window.partitionBy("q_id").orderBy(
+                F.col("cos").desc(), F.col("vec_id").asc())
+            old = (pairs.withColumn("rank", F.row_number().over(w))
+                   .where(F.col("rank") <= 3)).collect()
+            assert sorted(map(norm, new)) == sorted(map(norm, old))
+            for r in sorted(new, key=lambda r: r["rank"]):
+                got.setdefault(r["q_id"], []).append(r["vec_id"])
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    # NaN query: every cosine is NaN, zero-norm rows included, so the
+    # id tie-break picks them first; zero-norm query: the NaN rows are
+    # NaN and outrank the NULLs of every finite row
+    assert {q: got[q] for q in want} == want, got
+
+
 def test_quantized_topk_dim_mismatch_raises_descriptive(spark):
     """ADVICE r11: a body/query dimension mismatch raises the named
     error, not an opaque NumPy matmul shape failure."""
