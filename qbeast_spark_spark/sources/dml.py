@@ -38,7 +38,13 @@ from ..core.weight import INT_MAX
 from ..index.analyzer import with_index_columns
 from .log import CommitLog
 from .metadata import FileKernel
-from .writer import _complete_file_map, _cube_str, _materialize, _parse_cube
+from .writer import (
+    _complete_file_map,
+    _cube_str,
+    _materialize,
+    _parse_cube,
+    _stored_rows,
+)
 
 __all__ = ["delete_rows", "update_rows", "merge_rows"]
 
@@ -142,7 +148,7 @@ def _rewrite(qt, snap, matched: List[str], replacement,
     written as staging (revision 0) files inside the SAME commit —
     readable immediately, indexed by the next optimize(). ``rows`` bounds
     the replacement's row count for the writer's driver-lane guard;
-    None means the matched files' live rows (a replacement that only
+    None means the matched files' stored rows (a replacement that only
     drops or edits their rows)."""
     from ..core.revision import STAGING_REVISION_ID, Revision
     import time as _time
@@ -185,7 +191,7 @@ def _rewrite(qt, snap, matched: List[str], replacement,
                           read_files=read_files or matched, txn=txn)
 
     if rows is None:
-        rows = sum(f.live_rows for f in selected)
+        rows = _stored_rows(selected)
     add, weights_payload = _indexed_adds(qt, snap, rev, replacement,
                                          selected, rows=rows)
     return log.commit(
@@ -1248,9 +1254,11 @@ def merge_rows(spark, path: str, source, on,
             cdc_frames.append((inserts, "insert"))
         cdc = _cdc_of(qt, snap, cdc_frames)
         # replacement rows: the post-images (dv) or the matched files'
-        # live rows (rewrite), plus the in-space inserts
-        rows = (n_matched if mode == "dv" else live) + \
-            (n_ins if staged is None else 0)
+        # stored rows (rewrite), plus the in-space inserts
+        rows = n_matched if mode == "dv" else \
+            _stored_rows(snap.files[rel] for rel in matched)
+        if rows is not None and staged is None:
+            rows += n_ins
         if mode == "dv":
             # matched rows are masked where they sit; the mask positions
             # come from the SAME persisted pass-1 frame that produced the

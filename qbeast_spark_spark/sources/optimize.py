@@ -33,6 +33,7 @@ from .writer import (
     _cube_str,
     _materialize,
     _parse_cube,
+    _stored_rows,
 )
 
 __all__ = ["optimize_table", "convert_to_qbeast", "write_staging"]
@@ -148,11 +149,9 @@ def optimize_table(spark, path: str, fraction: float = 1.0,
     # filters for every column the selected files had one for
     bloom_cols = sorted({c for f in selected
                          for c in (f.blooms or {})})
-    # the selected files' stored rows bound the rewrite's input (their
-    # block counts include rows a deletion vector hides)
     add = _materialize(prepared, rev, weights, file_map, num_files, path,
                        bloom_cols=tuple(bloom_cols),
-                       rows=sum(b.count for f in selected for b in f.blocks))
+                       rows=_stored_rows(selected))
     return log.commit(
         add=add,
         remove=[f.path for f in selected],

@@ -4,7 +4,8 @@ same rows, the same parquet schemas (timezone annotation included), the
 same Block stats per file, and the same sample / prune answers — on
 adversarial values, under ANSI on and off. Plus the guard's boundary:
 ``min(cube size, DRIVER_MAX_WRITE_ROWS)`` rows take the driver lane and
-skip the sketch, one more row does not."""
+skip the sketch, one more row does not; wide columns and row counts the
+log cannot bound keep the rows off the driver."""
 
 import datetime as dt
 import decimal
@@ -12,6 +13,8 @@ import json
 import math
 import os
 import shutil
+import subprocess
+import sys
 from collections import Counter
 
 import pyarrow.parquet as pq
@@ -19,8 +22,7 @@ import pytest
 
 CUBE = 40
 ROWS_SCHEMA = ("x double, s string, ts timestamp, tsn timestamp_ntz, "
-               "d date, dec decimal(12,2), bin binary, flag boolean, "
-               "rid string")
+               "d date, dec decimal(12,2), flag boolean, rid string")
 SPECIALS = [None, float("nan"), float("inf"), float("-inf"), 0.0, -0.0]
 
 
@@ -42,8 +44,8 @@ def _rows(start, n, specials=False):
             dt.datetime(2024, 1, 1) + dt.timedelta(minutes=37 * i),
             dt.datetime(2023, 6, 1) + dt.timedelta(seconds=311 * i),
             dt.date(2020, 1, 1) + dt.timedelta(days=i % 400),
-            decimal.Decimal(i * 13 % 10_000) / 100, bytes([i % 256, 7]),
-            i % 2 == 0, f"id-{i}"))
+            decimal.Decimal(i * 13 % 10_000) / 100, i % 2 == 0,
+            f"id-{i}"))
     return out
 
 
@@ -96,6 +98,20 @@ def _lane_write(spark, base, dst, batch, rows):
     return add
 
 
+def _spy_collects(spark, monkeypatch):
+    """Record every driver-side Arrow collect (the driver lane's one)."""
+    collects = []
+    cls = type(spark.range(0))      # the session's concrete DataFrame
+    real = cls._collect_as_arrow
+
+    def spy(self, *a, **k):
+        collects.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(cls, "_collect_as_arrow", spy)
+    return collects
+
+
 def _norm(v):
     return "NaN" if isinstance(v, float) and math.isnan(v) else v
 
@@ -144,10 +160,11 @@ def _lane_view(spark, path, add):
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
 def test_driver_lane_matches_distributed_lane(spark, base_table, tmp_path,
-                                              ansi):
+                                              ansi, monkeypatch):
     from qbeast_spark_spark.sources.writer import DRIVER_MAX_WRITE_ROWS
 
     cap = min(CUBE, DRIVER_MAX_WRITE_ROWS)
+    collects = _spy_collects(spark, monkeypatch)
     prev_ansi = spark.conf.get("spark.sql.ansi.enabled")
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.ansi.enabled", ansi)
@@ -168,7 +185,9 @@ def test_driver_lane_matches_distributed_lane(spark, base_table, tmp_path,
             # fails it: the same batch through each lane
             for lane, bound in (("driver", 0), ("distributed", cap + 1)):
                 dst = str(tmp_path / f"{name}-{lane}")
+                before = len(collects)
                 add = _lane_write(spark, base_table, dst, batch, bound)
+                assert (len(collects) > before) == (lane == "driver"), lane
                 views.append(_lane_view(spark, dst, add))
             drv, dist = views
             assert sum(drv[0].values()) == len(rows), name
@@ -219,3 +238,103 @@ def test_guard_boundary_and_write_diagnostics(spark, tmp_path, monkeypatch):
         assert sum(f.rows for f in qt.snapshot().files.values()) == n
     # the driver lane drops the sketch job and the assign/write stages
     assert jobs[cap] < jobs[cap + 1], jobs
+
+
+def test_driver_fits_estimates_arrow_bytes(spark):
+    """Fixed-width and string columns give a width; binary, array, map
+    and struct columns give none, so such a batch stays distributed."""
+    from pyspark.sql import types as T
+
+    from qbeast_spark_spark.sources.writer import (
+        DRIVER_MAX_WRITE_BYTES, DRIVER_MAX_WRITE_ROWS, _STRING_BYTES,
+        _driver_fits)
+
+    narrow = T.StructType.fromDDL(ROWS_SCHEMA)
+    # 8 + str + 8 + 8 + 4 + 16 + 1 + str
+    width = 45 + 2 * (4 + _STRING_BYTES)
+    assert _driver_fits(narrow, DRIVER_MAX_WRITE_ROWS)
+    assert _driver_fits(narrow, DRIVER_MAX_WRITE_BYTES // width)
+    assert not _driver_fits(narrow, DRIVER_MAX_WRITE_BYTES // width + 1)
+    for wide in ("bin binary", "v array<float>", "m map<string,int>",
+                 "st struct<a:int>"):
+        assert not _driver_fits(T.StructType.fromDDL(f"x double, {wide}"),
+                                1), wide
+
+
+def test_wide_rows_at_the_cap_stay_off_the_driver(tmp_path):
+    """64 rows of 256 KB blobs at cube size 64 (so at the row cap): 16 MB,
+    four times ``spark.driver.maxResultSize``. The write must skip the
+    sketch yet keep the rows on the executors — a driver collect of the
+    batch fails the job."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys; sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession, functions as F
+import qbeast_spark_spark as qss
+from qbeast_spark_spark.sources import writer as W
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.driver.maxResultSize", "4m")
+         .config("spark.ui.enabled", "false")
+         .config("spark.ui.showConsoleProgress", "false").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+blob = F.concat(F.col("id").cast("string").cast("binary"),
+                F.unhex(F.repeat(F.lit("ab"), 256 * 1024)))
+df = spark.range(64).select(F.col("id").alias("k"), blob.alias("blob"))
+p = {str(tmp_path / "t")!r}
+qss.write(df, p, columns_to_index=["k"], cube_size=64)
+assert W.LAST_WRITE_PHASES["domains"] == 0.0, W.LAST_WRITE_PHASES
+got = qss.QbeastTable.for_path(spark, p).to_df().agg(
+    F.count(F.lit(1)), F.sum(F.length("blob"))).first()
+assert tuple(got) == (64, 64 * 256 * 1024 + 10 + 2 * 54), tuple(got)
+print("WIDE_ROWS_OK")
+"""
+    out = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path),
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "WIDE_ROWS_OK" in out.stdout
+
+
+def test_stats_less_delta_adds_bound_no_rewrite(spark, tmp_path,
+                                                monkeypatch):
+    """A Delta add without ``numRecords`` stats imports as 0 rows. That is
+    no bound: optimize over such files (at the 5M default cube size) must
+    not take the driver lane on the strength of it."""
+    import pyarrow as pa
+
+    import qbeast_spark_spark as qss
+    from qbeast_spark_spark.sources import writer as W
+    from qbeast_spark_spark.sources.log import CommitLog
+
+    p = tmp_path / "delta"
+    (p / "_delta_log").mkdir(parents=True)
+    data = pa.table({"k": pa.array(range(3000), pa.int64()),
+                     "v": pa.array([i % 97 / 7.0 for i in range(3000)])})
+    adds = []
+    for i in range(3):
+        name = f"part-{i}.parquet"
+        pq.write_table(data.slice(i * 1000, 1000), str(p / name))
+        adds.append({"add": {"path": name, "partitionValues": {},
+                             "size": os.path.getsize(p / name),
+                             "modificationTime": 0, "dataChange": True}})
+    schema = spark.createDataFrame([], "k bigint, v double").schema.json()
+    actions = [{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+               {"metaData": {"id": "t", "format": {"provider": "parquet",
+                                                   "options": {}},
+                             "schemaString": schema, "partitionColumns": [],
+                             "configuration": {}}}] + adds
+    with open(p / "_delta_log" / f"{0:020d}.json", "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    qss.attach_qbeast_delta(str(p))
+    files = CommitLog(str(p)).snapshot().files.values()
+    assert all(f.rows == 0 and f.size > 0 for f in files)
+    assert W._stored_rows(files) is None
+
+    collects = _spy_collects(spark, monkeypatch)
+    qss.optimize_table(spark, str(p), columns_to_index=["k", "v"])
+    assert collects == []
+    qt = qss.QbeastTable.for_path(spark, str(p))
+    assert qt.to_df().count() == 3000
+    snap = qt.snapshot(refresh=True)
+    assert sum(f.rows for f in snap.files.values()) == 3000
+    assert all(f.revision_id == 1 for f in snap.files.values())
