@@ -688,7 +688,9 @@ class QbeastSqlCatalog:
                     "than the existing qbeast table at "
                     f"{location}. Do you want to ALTER TABLE first?")
         elif schema is not None:
-            df = self.spark.createDataFrame([], schema)
+            from .frames import empty_frame
+
+            df = empty_frame(self.spark, schema)
         else:
             kind = "managed" if managed else "External"
             raise ValueError(
@@ -1875,10 +1877,16 @@ class QbeastSqlCatalog:
     # -- helpers ---------------------------------------------------------------------
 
     def _status_df(self, operation: str, table: str, version, rows):
-        return self.spark.createDataFrame(
-            [(operation, table,
-              None if version is None else int(version),
-              None if rows is None else int(rows))],
+        import pyarrow as pa
+
+        from .frames import arrow_frame
+
+        return arrow_frame(self.spark, pa.table({
+            "operation": [operation], "tableName": [table],
+            "version": pa.array(
+                [None if version is None else int(version)], pa.int64()),
+            "affected_rows": pa.array(
+                [None if rows is None else int(rows)], pa.int64())}),
             "operation STRING, tableName STRING, version BIGINT, "
             "affected_rows BIGINT")
 

@@ -84,6 +84,8 @@ def table_changes(qt, starting_version: int,
     for which commits are decodable."""
     from pyspark.sql import functions as F
 
+    from .frames import empty_frame
+
     log: CommitLog = qt.log
     versions = log._versions()
     if not versions:
@@ -148,7 +150,7 @@ def table_changes(qt, starting_version: int,
                 frames.append(_tag(df, v, ts, "insert"))
     if not frames:
         schema = qt.schema()
-        base = qt.spark.createDataFrame([], schema) if schema else None
+        base = empty_frame(qt.spark, schema) if schema else None
         if base is None:
             raise ValueError("no decodable commits in range and no schema")
         return _tag(base.withColumn(CHANGE_TYPE, F.lit("insert")),

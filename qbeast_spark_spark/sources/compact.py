@@ -174,7 +174,10 @@ def compact_table(spark, path: str,
     removed, or its DV changed after planning) is dropped — an orphaned
     output parquet is reclaimed by vacuum().
     """
+    import pyarrow as pa
     from pyspark.sql import functions as F
+
+    from .frames import arrow_frame
 
     log = CommitLog(path)
     snap = log.snapshot()
@@ -215,9 +218,9 @@ def compact_table(spark, path: str,
         return None
 
     specs = []
-    for i, b in enumerate(bins):
+    for b in bins:
         bloom_cols = sorted({c for f in b for c in (f.blooms or {})})
-        specs.append((i, json.dumps({
+        specs.append(json.dumps({
             "files": [{
                 "path": f.path,
                 "blocks": [[blk.cube, blk.min_weight, blk.max_weight,
@@ -227,8 +230,11 @@ def compact_table(spark, path: str,
                 "dv": f.dv,
             } for f in b],
             "bloom_cols": bloom_cols,
-        })))
-    work = (spark.createDataFrame(specs, "bin_id long, spec string")
+        }))
+    work = (arrow_frame(spark, pa.table({
+                "bin_id": pa.array(range(len(specs)), pa.int64()),
+                "spec": pa.array(specs, pa.string())}),
+                "bin_id long, spec string")
             .repartition(len(bins), F.col("bin_id")))
     meta = work.mapInArrow(_make_compact_fn(path, bloom_bits),
                            _OUT_SCHEMA).collect()

@@ -34,6 +34,14 @@ Format layers (all little-endian unless noted, per the spec):
   descriptor's ``offset`` points at the size prefix and ``sizeInBytes``
   is dataSize (framing excluded).
 
+Spark side (``with_dv_filter``): a scan of DV'd files anti-joins the
+deleted (file, row index) positions. Up to ``_SMALL_DV_MAX_POSITIONS``
+positions are decoded on the driver into an Arrow-built local relation
+(``sources/frames.py``), so such a scan plans a LocalTableScan and runs
+no Python worker; above the bound an executor stage decodes them
+(``positions_df``). The DML verbs build new masks under the same bound
+on the driver too (``sources/dml.py`` ``_dv_mask_adds``).
+
 The reference engine inherits DVs from delta-spark when users run Delta
 DML against its tables (docs/Quickstart.md:409-427 tells them the index
 is lost afterwards); reading them here keeps such tables importable.
@@ -353,27 +361,26 @@ def positions_df(spark, entries: List[Tuple[str, DVDescriptor]],
     O(#DV files) descriptors, never the position lists — at 100 TB a
     snapshot can carry billions of deleted positions, which must stay
     distributed."""
+    import pyarrow as pa
     from pyspark.sql import types as T
 
+    from .frames import arrow_frame
+
     _ensure_shipped()
-    rows = []
-    for abs_file, desc in entries:
-        rows.append((
-            _file_uri(abs_file), desc.storage_type, desc.path_or_inline,
-            -1 if desc.offset is None else int(desc.offset),
-            desc.size_in_bytes,
-            "" if desc.storage_type == "i"
-            else dv_abs_path(table_path, desc)))
-    schema = T.StructType([
-        T.StructField("file_path", T.StringType()),
-        T.StructField("st", T.StringType()),
-        T.StructField("enc", T.StringType()),
-        T.StructField("off", T.IntegerType()),
-        T.StructField("size", T.IntegerType()),
-        T.StructField("dv_path", T.StringType()),
-    ])
-    desc_df = spark.createDataFrame(rows, schema)
-    n = max(1, len(rows))
+    desc = pa.table({
+        "file_path": [_file_uri(f) for f, _d in entries],
+        "st": [d.storage_type for _f, d in entries],
+        "enc": [d.path_or_inline for _f, d in entries],
+        "off": pa.array([-1 if d.offset is None else int(d.offset)
+                         for _f, d in entries], pa.int32()),
+        "size": pa.array([d.size_in_bytes for _f, d in entries],
+                         pa.int32()),
+        "dv_path": ["" if d.storage_type == "i"
+                    else dv_abs_path(table_path, d) for f, d in entries],
+    })
+    desc_df = arrow_frame(spark, desc, "file_path string, st string, "
+                          "enc string, off int, size int, dv_path string")
+    n = max(1, len(entries))
 
     def _expand(iterator):
         import pandas as pd
@@ -445,11 +452,16 @@ def _session_stopped(sess) -> bool:
 
 def _small_dv_frame(spark, entries, table_path: str):
     """Driver-decoded (file_path, row_index) frame for a small
-    descriptor set, cached per exact content identity."""
-    import pandas as pd
+    descriptor set, cached per exact content identity. It is built from
+    Arrow, so the plan is a LocalTableScan and a DV'd scan starts no
+    Python worker."""
     import weakref
     from collections import OrderedDict
+
+    import pyarrow as pa
     from pyspark.sql import functions as F
+
+    from .frames import arrow_frame
 
     global _SMALL_DV_CACHE
     if _SMALL_DV_CACHE is None:
@@ -466,24 +478,26 @@ def _small_dv_frame(spark, entries, table_path: str):
     if hit is not None:
         _SMALL_DV_CACHE.move_to_end(key)
         return hit[0]
-    frames = []
+    uris, parts = [], []
     for abs_file, desc in entries:
-        p = descriptor_positions(table_path, desc)
-        frames.append(pd.DataFrame({
-            "file_path": np.repeat(_file_uri(abs_file), len(p)),
-            "row_index": p.astype("int64")}))
-    # explicit schema: an all-empty position set (cardinality-0
-    # descriptors on an imported table) must not crash inference
-    pdf = pd.concat(frames, ignore_index=True) if frames else \
-        pd.DataFrame({"file_path": pd.Series(dtype="str"),
-                      "row_index": pd.Series(dtype="int64")})
-    pos = F.broadcast(spark.createDataFrame(
-        pdf, schema="file_path string, row_index long"))
+        uris.append(_file_uri(abs_file))
+        parts.append(descriptor_positions(table_path, desc).astype("int64"))
+    # each position row names its file through a dictionary index, so
+    # the driver never holds one URI string per deleted row
+    file_idx = np.repeat(np.arange(len(parts), dtype=np.int32),
+                         [len(p) for p in parts])
+    tbl = pa.table({
+        "file_path": pa.DictionaryArray.from_arrays(
+            file_idx, pa.array(uris, pa.string())).dictionary_decode(),
+        "row_index": pa.array(np.concatenate(parts) if parts else
+                              np.empty(0, np.int64))})
+    pos = F.broadcast(arrow_frame(
+        spark, tbl, "file_path string, row_index long"))
     try:
         wr = weakref.ref(spark)
     except TypeError:       # session type not weakref-able: no caching
         return pos
-    _SMALL_DV_CACHE[key] = (pos, len(pdf), wr)
+    _SMALL_DV_CACHE[key] = (pos, tbl.num_rows, wr)
     while len(_SMALL_DV_CACHE) > 1 and (
             len(_SMALL_DV_CACHE) > _SMALL_DV_CACHE_MAX_ENTRIES
             or sum(n for (_p, n, _w) in _SMALL_DV_CACHE.values())
@@ -500,7 +514,8 @@ def with_dv_filter(df, spark, entries: List[Tuple[str, DVDescriptor]],
     extra I/O); the anti-join keys on (file_path, row_index). Small
     snapshots (<= _SMALL_DV_MAX_POSITIONS total, the common case —
     optimize() purges DVs continuously) decode on the driver and
-    broadcast the position side; larger snapshots decode on executors
+    broadcast the position side, an Arrow-built LocalTableScan that
+    starts no Python worker; larger snapshots decode on executors
     (positions_df). No O(rows) data ever moves through Python either
     way."""
     from pyspark.sql import functions as F

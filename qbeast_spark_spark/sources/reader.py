@@ -155,7 +155,9 @@ class QbeastTable:
         sj = snap.schema_json
         schema = T.StructType.fromJson(json.loads(sj)) if sj else None
         if not rel_paths:
-            df = self.spark.createDataFrame([], schema)
+            from .frames import empty_frame
+
+            df = empty_frame(self.spark, schema)
             if file_col:
                 df = df.withColumn(file_col, F.lit(""))
             if pos_col:

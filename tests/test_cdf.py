@@ -235,3 +235,48 @@ def test_restore_decodes_as_delete_plus_insert(spark, tmp_table):
     t = _types(ch)
     assert t == {"delete": 50, "insert": 200}
     assert qt.to_df().count() == 200
+
+
+@pytest.mark.parametrize("mode", ["dv", "rewrite"])
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_merge_images_from_one_match_pass(spark, tmp_table, ansi, mode):
+    """MERGE's change rows come from its one match pass: pre-images are
+    the matched target rows, post-images carry the assigned values,
+    inserts the new rows, and a matched-delete records the removed rows —
+    in dv and rewrite mode, under ANSI on and off."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        df = spark.createDataFrame([(i, float(i)) for i in range(100)],
+                                   "k long, v double")
+        qss.write(df, tmp_table, columns_to_index=["k"], cube_size=25)
+        qt = qss.QbeastTable.for_path(spark, tmp_table)
+        qt.enable_change_data_feed()
+        qt.delete([("k", "<", 5)], mode="dv")
+        src = spark.createDataFrame(
+            [(3, -3.0), (10, -10.0), (11, -11.0), (None, 7.0), (500, 5.0)],
+            "k long, v double")
+        r = qt.merge(src, on="k",
+                     when_matched_update={"v": "__src_v * 2"},
+                     when_not_matched_insert="all", mode=mode)
+        assert (r["rows_updated"], r["rows_inserted"]) == (2, 3)
+        ch = qt.table_changes(r["version"], r["version"])
+
+        def rows(kind):
+            return sorted(((x["k"], x["v"]) for x in ch.where(
+                f"_change_type = '{kind}'").collect()), key=str)
+
+        assert rows("update_preimage") == [(10, 10.0), (11, 11.0)]
+        assert rows("update_postimage") == [(10, -20.0), (11, -22.0)]
+        # k=3 was masked by the DV, so it inserts; NULL keys never match
+        assert rows("insert") == sorted(
+            [(3, -3.0), (None, 7.0), (500, 5.0)], key=str)
+
+        d = qt.merge(spark.createDataFrame([(20,), (21,), (999,)], "k long"),
+                     on="k", when_matched_delete=True, mode=mode)
+        assert d["rows_deleted"] == 2
+        ch = qt.table_changes(d["version"], d["version"])
+        assert _types(ch) == {"delete": 2}
+        assert rows("delete") == [(20, 20.0), (21, 21.0)]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -383,3 +383,64 @@ def test_small_dv_cache_evicts_stopped_sessions(spark, tmp_path):
     dvm._small_dv_frame(spark, [], table)   # triggers the sweep
     assert ("dead-key",) not in dvm._SMALL_DV_CACHE
     dvm._SMALL_DV_CACHE = None
+
+
+def test_dv_mask_driver_lane_matches_executor_lane(spark, dv_table,
+                                                   monkeypatch):
+    """``_dv_mask_adds`` builds masks on the driver for at most
+    ``_SMALL_DV_MAX_POSITIONS`` hits and on executors above it. Both lanes
+    must give the same bitmaps, cardinalities and new-delete counts: for
+    a file that already has a DV (re-masked positions are a no-op),
+    duplicate positions, and an empty hit set."""
+    from pyspark.sql.group import GroupedData
+
+    from qbeast_spark_spark.sources import deletion_vectors as DVm
+    from qbeast_spark_spark.sources import dml
+    from qbeast_spark_spark.sources.deletion_vectors import (
+        _file_uri, descriptor_positions)
+
+    qt = qss.QbeastTable.for_path(spark, dv_table)
+    qt.delete([("l_orderkey", "<", 300)], mode="dv")
+    snap = qt.snapshot(refresh=True)
+    table = os.path.abspath(dv_table)
+    old_rel = next(rel for rel, f in snap.files.items() if f.dv)
+    new_rel = next(rel for rel, f in snap.files.items() if not f.dv)
+    old = descriptor_positions(table, DVDescriptor.from_json(
+        snap.files[old_rel].dv))
+    rows = ([(old_rel, int(p)) for p in old[:3]] +
+            [(old_rel, int(p)) for p in (1, 2, 2, 5)] +
+            [(new_rel, int(p)) for p in (0, 7, 7, 7, 9)])
+    hits = spark.createDataFrame(
+        [(_file_uri(os.path.join(table, rel)), p) for rel, p in rows],
+        "fp string, ri long")
+    n = len(rows)
+    want = {old_rel: sorted(set(old.tolist()) | {1, 2, 5}),
+            new_rel: [0, 7, 9]}
+    want_new = sum(len(v) for v in want.values()) - len(old)
+
+    grouped = []
+    orig = GroupedData.applyInPandas
+
+    def spy(self, *a, **k):
+        grouped.append(1)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy)
+
+    def run(cap, frame, n_hits, rels):
+        monkeypatch.setattr(DVm, "_SMALL_DV_MAX_POSITIONS", cap)
+        grouped.clear()
+        adds, new = dml._dv_mask_adds(qt, snap, rels, frame, n_hits)
+        got = {a.path: (a.dv["cardinality"], descriptor_positions(
+            table, DVDescriptor.from_json(a.dv)).tolist()) for a in adds}
+        return got, new, bool(grouped)
+
+    driver = run(n, hits, n, [old_rel, new_rel])
+    executor = run(n - 1, hits, n, [old_rel, new_rel])
+    assert driver[2] is False and executor[2] is True
+    assert driver[:2] == executor[:2] == (
+        {rel: (len(v), v) for rel, v in want.items()}, want_new)
+
+    empty = hits.limit(0)
+    assert run(0, empty, 0, [])[:2] == ({}, 0)
+    assert run(-1, empty, 0, [])[:2] == ({}, 0)

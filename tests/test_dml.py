@@ -2,6 +2,9 @@
 the reference hands to DeltaTable, after which its docs say the table
 "should only be read using delta" (Quickstart.md:409-427)."""
 
+import os
+
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -794,3 +797,158 @@ def test_merge_source_pin_skipped_for_deterministic_source(
                  materialize_source="never")
 
     assert qt.to_df().where("k >= 1000").count() == 200
+
+
+def _listing(path):
+    return sorted(os.path.relpath(os.path.join(d, f), path)
+                  for d, _dirs, files in os.walk(path) for f in files)
+
+
+@pytest.fixture()
+def keyed(spark, tmp_path):
+    """lineitem with a unique ``id`` merge key (the test data repeats
+    (l_orderkey, l_linenumber)), indexed like ``table``."""
+    raw = str(tmp_path / "keyed.parquet")
+    (load(spark, "lineitem").withColumn("id", F.monotonically_increasing_id())
+     .write.parquet(raw))
+    li = spark.read.parquet(raw)
+    path = str(tmp_path / "keyed")
+    qss.write(li, path, columns_to_index=["l_orderkey", "l_extendedprice"],
+              cube_size=500)
+    return path, li
+
+
+def _dv_target(spark, path, li):
+    """The table with a deletion vector on some files."""
+    qt = qss.QbeastTable.for_path(spark, path)
+    qt.delete([("l_orderkey", "<", 200)], mode="dv")
+    return qt, li.where("l_orderkey >= 200")
+
+
+def _upsert_source(li):
+    """Rows 1000-1100 with a changed quantity (matches) plus rows
+    2000-2100 under new ids (inserts)."""
+    upd = (li.where("l_orderkey BETWEEN 1000 AND 1100")
+           .withColumn("l_quantity", F.col("l_quantity") + 100))
+    new = (li.where("l_orderkey BETWEEN 2000 AND 2100")
+           .withColumn("id", F.col("id") + (1 << 40)))
+    return upd.unionByName(new)
+
+
+def test_merge_dv_upsert_runs_one_match_pass(spark, keyed):
+    """A dv-mode upsert into a DV'd target scans the target once: the key
+    box, the match pass, the insert collect, the mask and the write stay
+    within 12 Spark jobs."""
+    path, li = keyed
+    qt, live = _dv_target(spark, path, li)
+    src = _upsert_source(li)
+    n_upd = li.where("l_orderkey BETWEEN 1000 AND 1100").count()
+    n_ins = li.where("l_orderkey BETWEEN 2000 AND 2100").count()
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-one-pass", "merge-one-pass")
+    try:
+        out = qt.merge(src, on="id",
+                       when_matched_update="all",
+                       when_not_matched_insert="all", mode="dv")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("merge-one-pass")
+    assert len(jobs) <= 12, len(jobs)
+    assert out["rows_updated"] == n_upd and out["rows_inserted"] == n_ins
+    assert out["files_dv"] >= 1 and out["files_rewritten"] == 0
+    want = (live.where("NOT l_orderkey BETWEEN 1000 AND 1100")
+            .unionByName(src))
+    got = qt.to_df()
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+
+
+@pytest.mark.parametrize("mode", ["dv", "rewrite"])
+def test_merge_multiple_match_raises_before_writing(spark, keyed, mode):
+    path, li = keyed
+    qt, _live = _dv_target(spark, path, li)
+    before, version = _listing(path), qt.snapshot(refresh=True).version
+    src = _upsert_source(li)
+    dup = src.unionByName(src.where("l_orderkey = 1000"))
+    with pytest.raises(ValueError, match="multiple rows"):
+        qt.merge(dup, on="id",
+                 when_matched_update="all", when_not_matched_insert="all",
+                 mode=mode)
+    assert _listing(path) == before
+    assert qt.snapshot(refresh=True).version == version
+
+
+@pytest.mark.parametrize("lane", ["driver", "persisted"])
+def test_merge_null_keys_insert(spark, tmp_table, monkeypatch, lane):
+    """NULL source keys never match, so they insert — in the driver
+    insert lane and in the persisted one above its bound."""
+    from qbeast_spark_spark.sources import dml
+
+    if lane == "persisted":
+        monkeypatch.setattr(dml, "DRIVER_MAX_WRITE_ROWS", 0)
+    df = spark.createDataFrame([(i, float(i)) for i in range(20)],
+                               "k long, v double")
+    qss.write(df, tmp_table, columns_to_index=["k"], cube_size=10)
+    qt = qss.QbeastTable.for_path(spark, tmp_table)
+    src = spark.createDataFrame(
+        [(None, 1.5), (None, 2.5), (3, 30.0), (50, 5.0)],
+        "k long, v double")
+    out = qt.merge(src, on="k", when_matched_update="all",
+                   when_not_matched_insert="all")
+    assert out["rows_updated"] == 1 and out["rows_inserted"] == 3
+    got = sorted((r["k"] if r["k"] is not None else -1, r["v"])
+                 for r in qt.to_df().collect())
+    want = sorted([(i, float(i)) for i in range(20) if i != 3] +
+                  [(3, 30.0), (50, 5.0), (-1, 1.5), (-1, 2.5)])
+    assert got == want
+
+
+def test_merge_insert_only_into_dv_target(spark, keyed):
+    """Keys whose target rows a DV already masked insert again; keys of
+    live rows do not; new keys insert."""
+    path, li = keyed
+    qt, live = _dv_target(spark, path, li)
+    src = li.where("l_orderkey BETWEEN 150 AND 250")
+    masked = src.where("l_orderkey < 200")
+    out = qt.merge(src, on="id",
+                   when_not_matched_insert="all")
+    assert out["rows_inserted"] == masked.count()
+    assert out["files_rewritten"] == 0 and out["rows_updated"] == 0
+    want = live.unionByName(masked)
+    got = qt.to_df()
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_arrow_min_max_matches_spark(spark, ansi):
+    """The driver insert lane's space bounds follow Spark's min/max:
+    NULLs skipped, NaN above every number."""
+    from pyspark.sql import types as T
+
+    from qbeast_spark_spark.core.transform import LinearTransformation
+    from qbeast_spark_spark.sources.dml import (_arrow_min_max,
+                                                _space_min_max_aggs)
+
+    nan, inf = float("nan"), float("inf")
+    cases = [[1.0, nan, 3.0, None], [nan, nan], [None, None], [],
+             [-inf, 2.0], [inf, nan, -0.0], [0.0, -0.0]]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        for vals in cases:
+            df = spark.createDataFrame(
+                [(v, i) for i, v in enumerate(vals)],
+                T.StructType([T.StructField("x", T.DoubleType()),
+                              T.StructField("n", T.LongType())]))
+            checks = [("x", LinearTransformation(0.0, 1.0)),
+                      ("n", LinearTransformation(0.0, 1.0))]
+            row = df.agg(*_space_min_max_aggs(checks)).first().asDict()
+            tbl = pa.Table.from_batches(df._collect_as_arrow(
+                empty_list_if_zero_records=False))
+            got = _arrow_min_max(tbl, checks)
+            # NaN compared as a token; -0.0 == 0.0 as in the bounds check
+            assert {k: "nan" if v != v else v for k, v in got.items()} == \
+                {k: "nan" if v != v else v for k, v in row.items()}, vals
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
