@@ -39,8 +39,9 @@ deleted (file, row index) positions. Up to ``_SMALL_DV_MAX_POSITIONS``
 positions are decoded on the driver into an Arrow-built local relation
 (``sources/frames.py``), so such a scan plans a LocalTableScan and runs
 no Python worker; above the bound an executor stage decodes them
-(``positions_df``). The DML verbs build new masks under the same bound
-on the driver too (``sources/dml.py`` ``_dv_mask_adds``).
+(``positions_df``). The DML verbs build new masks of up to
+``_DRIVER_MASK_MAX_HITS`` positions on the driver too (``sources/dml.py``
+``_dv_mask_adds``; that bound was measured against the executor lane).
 
 The reference engine inherits DVs from delta-spark when users run Delta
 DML against its tables (docs/Quickstart.md:409-427 tells them the index
@@ -482,13 +483,11 @@ def _small_dv_frame(spark, entries, table_path: str):
     for abs_file, desc in entries:
         uris.append(_file_uri(abs_file))
         parts.append(descriptor_positions(table_path, desc).astype("int64"))
-    # each position row names its file through a dictionary index, so
-    # the driver never holds one URI string per deleted row
+    # one file URI per position row, taken from the per-file URI array
     file_idx = np.repeat(np.arange(len(parts), dtype=np.int32),
                          [len(p) for p in parts])
     tbl = pa.table({
-        "file_path": pa.DictionaryArray.from_arrays(
-            file_idx, pa.array(uris, pa.string())).dictionary_decode(),
+        "file_path": pa.array(uris, pa.string()).take(file_idx),
         "row_index": pa.array(np.concatenate(parts) if parts else
                               np.empty(0, np.int64))})
     pos = F.broadcast(arrow_frame(

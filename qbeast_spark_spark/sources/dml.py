@@ -39,10 +39,8 @@ from ..index.analyzer import with_index_columns
 from .log import CommitLog
 from .metadata import FileKernel
 from .writer import (
-    DRIVER_MAX_WRITE_ROWS,
     _complete_file_map,
     _cube_str,
-    _driver_fits,
     _materialize,
     _parse_cube,
     _stored_rows,
@@ -614,6 +612,19 @@ def _delete_with_dvs(qt, snap, matched: List[str], hits, n_hits: int,
 _DV_PROTOCOL = {"readerFeatures": ["deletionVectors"],
                 "writerFeatures": ["deletionVectors"]}
 
+# Largest hit set whose bitmaps _dv_mask_adds builds on the driver.
+# Measured on a 4-vCPU VM (local[4], 2 GB driver, a persisted (fp, ri)
+# frame over a 640k-row table; median of 3 calls per lane, lanes
+# alternating), driver vs applyInPandas lane in ms:
+#   hits      4 files      8 files     ~60 files
+#   10,000    48 / 405     43 / 694    52 / 2805
+#   100,000  176 / 495    148 / 772   141 / 2487
+#   262,144  343 / 553    329 / 582   288 / 2692
+# The driver lane wins in every cell; larger sets were not measured, and
+# 262,144 is also the bound under which reads decode positions on the
+# driver (deletion_vectors._SMALL_DV_MAX_POSITIONS).
+_DRIVER_MASK_MAX_HITS = 262_144
+
 
 def _dv_mask_adds(qt, snap, matched: List[str], hits,
                   n_hits: Optional[int] = None):
@@ -624,15 +635,14 @@ def _dv_mask_adds(qt, snap, matched: List[str], hits,
     per-file union makes those no-ops and the new-mask count exact.
 
     ``n_hits`` is the caller's exact row count of ``hits`` (None:
-    unknown). At most ``_SMALL_DV_MAX_POSITIONS`` hits — the bound under
-    which reads already decode positions on the driver — are collected
-    in one Arrow job and each file's bitmap is built and written on the
-    driver. Above it (or unknown), position sets never touch the
-    driver: one executor task per file builds and writes its bitmap
-    (applyInPandas over row-position groups), and the driver collects
-    only O(#matched files) descriptor rows."""
-    from .deletion_vectors import (_SMALL_DV_MAX_POSITIONS, DVDescriptor,
-                                   _ensure_shipped, descriptor_positions,
+    unknown). At most ``_DRIVER_MASK_MAX_HITS`` hits are collected in one
+    Arrow job and each file's bitmap is built and written on the driver.
+    Above it (or unknown), position sets never touch the driver: one
+    executor task per file builds and writes its bitmap (applyInPandas
+    over row-position groups), and the driver collects only O(#matched
+    files) descriptor rows."""
+    from .deletion_vectors import (DVDescriptor, _ensure_shipped,
+                                   descriptor_positions,
                                    roaring_array_encode, write_dv_file,
                                    z85_encode)
 
@@ -648,14 +658,14 @@ def _dv_mask_adds(qt, snap, matched: List[str], hits,
         if snap.files[rel].dv:
             old_dv[uri] = snap.files[rel].dv
 
-    def _build(key, pdf):
+    def _mask(fp, positions):
+        """Write file ``fp``'s bitmap of its old mask plus ``positions``
+        (an int64 array, duplicates allowed); its descriptor row."""
         import uuid as _u
 
         import numpy as _np
-        import pandas as pd
 
-        fp = key[0]
-        new = _np.unique(pdf["ri"].to_numpy(dtype="int64"))
+        new = _np.unique(positions)
         prev = _np.empty(0, dtype="int64")
         desc_json = old_dv.get(fp)
         if desc_json:
@@ -667,23 +677,32 @@ def _dv_mask_adds(qt, snap, matched: List[str], hits,
         data = roaring_array_encode(union)
         offset, size = write_dv_file(
             os.path.join(table_path, name), data)
-        return pd.DataFrame({
-            "fp": [fp], "enc": [z85_encode(uid.bytes)],
-            "offset": [offset], "size": [size],
-            "cardinality": [len(union)],
-            "new_deletes": [len(union) - len(prev)]})
+        return {"fp": fp, "enc": z85_encode(uid.bytes), "offset": offset,
+                "size": size, "cardinality": len(union),
+                "new_deletes": len(union) - len(prev)}
 
-    if n_hits is not None and n_hits <= _SMALL_DV_MAX_POSITIONS:
+    def _build(key, pdf):
         import pandas as pd
+
+        row = _mask(key[0], pdf["ri"].to_numpy(dtype="int64"))
+        return pd.DataFrame({k: [v] for k, v in row.items()})
+
+    if n_hits is not None and n_hits <= _DRIVER_MASK_MAX_HITS:
+        import numpy as np
         import pyarrow as pa
 
         tbl = pa.Table.from_batches(hits._collect_as_arrow(
             empty_list_if_zero_records=False))
-        groups = tbl.group_by("fp").aggregate([("ri", "list")])
-        out = [r for fp, ri in zip(groups["fp"].to_pylist(),
-                                   groups["ri_list"].to_pylist())
-               for r in _build((fp,), pd.DataFrame({"ri": ri}))
-               .to_dict("records")]
+        # group positions by file in numpy: sort the file codes, cut
+        # where they change
+        fps = tbl.column("fp").combine_chunks().dictionary_encode()
+        codes = fps.indices.to_numpy(zero_copy_only=False)
+        ri = tbl.column("ri").to_numpy().astype("int64", copy=False)
+        names = fps.dictionary.to_pylist()
+        order = np.argsort(codes, kind="stable")
+        cuts = np.flatnonzero(np.diff(codes[order])) + 1
+        out = [_mask(names[codes[part[0]]], ri[part])
+               for part in np.split(order, cuts) if len(part)]
     else:
         out = (hits.repartition(max(1, len(matched)), "fp")
                .groupBy("fp")
@@ -947,7 +966,8 @@ def merge_rows(spark, path: str, source, on,
     once; rewrite mode also joins the matched files in full for their
     new contents. Not-matched source rows are appended through the
     existing cube weights, and everything commits in ONE atomic log
-    version. A dv-mode upsert runs about 11 Spark jobs.
+    version. A dv-mode upsert runs about 14 Spark jobs, 5 of them for the
+    persisted insert set's count and bounds.
 
     ``mode`` picks the matched-file strategy (Delta's DV-backed MERGE):
     ``"rewrite"`` replaces the matched files outright; ``"dv"`` masks
@@ -1089,16 +1109,14 @@ def merge_rows(spark, path: str, source, on,
         per_file: Dict[str, int] = {}
         box: Optional[list] = []        # [] = no pruning possible; None = no
         box_cands = None                # non-null source keys (no matches)
-        n_src = None                    # source rows (bounds the inserts)
         if snap.files:
             import datetime as _dt
 
-            aggs = [F.count(F.lit(1)).alias("__n_src")]
+            aggs = []
             for k in keys:
                 aggs += [F.min(k).alias(f"__lo_{k}"),
                          F.max(k).alias(f"__hi_{k}")]
             b = source.agg(*aggs).collect()[0]
-            n_src = int(b["__n_src"])
             for k in keys:
                 lo, hi = b[f"__lo_{k}"], b[f"__hi_{k}"]
                 if lo is None:          # no non-null key values: no matches
@@ -1121,12 +1139,19 @@ def merge_rows(spark, path: str, source, on,
         # positions and the insert anti-join are projections of M, so
         # the target is scanned once. M is hash-partitioned by file, so
         # that aggregate (count_distinct included) runs without a further
-        # exchange. Released in the finally.
+        # exchange. M keeps whole rows only when something reads them:
+        # CDF images, or the post-image an update writes in dv mode.
+        # Released in the finally.
+        from .cdf import cdf_enabled
+
         n_scanned = 0
         matches = None
         rev = snap.latest_revision()
+        cdf = cdf_enabled(snap.properties)
+        wide = cdf or (when_matched_update is not None and mode != "rewrite")
+        # rewrite mode checks its replacement rows instead (below)
         space_checks = _space_checks(rev, set(assignments)) \
-            if rev is not None else []
+            if rev is not None and mode != "rewrite" else []
         space_row: Dict[str, Any] = {}
         if snap.files and box_cands is not None and box_cands[0]:
             candidates, residual = box_cands
@@ -1136,8 +1161,10 @@ def merge_rows(spark, path: str, source, on,
                                        file_col="_f", pos_col="_ri")
                 if residual is not None:
                     sel = sel.where(residual)
-                matches = (sel.join(src, keys, "inner").repartition("_f")
-                           .persist())
+                matches = sel.join(src, keys, "inner")
+                if not wide:
+                    matches = matches.select(*keys, "_f", "_ri")
+                matches = matches.repartition("_f").persist()
                 pins.append(matches)
                 post_vals = {name: _cast(assignments[name], name)
                              for name, _t in space_checks}
@@ -1209,29 +1236,14 @@ def merge_rows(spark, path: str, source, on,
             inserts = _to_target_schema(anti, exprs)
             ins_checks = _space_checks(rev, set(rev.column_names)) \
                 if rev is not None else []
-            if n_src is not None and n_src <= DRIVER_MAX_WRITE_ROWS and \
-                    _driver_fits(inserts.schema, n_src):
-                # at most n_src rows, within the writer's driver bounds:
-                # collect them once; the count, the space bounds and every
-                # later use (CDF, constraints, the write) read that copy
-                import pyarrow as pa
-
-                from .frames import arrow_frame
-
-                tbl = pa.Table.from_batches(inserts._collect_as_arrow(
-                    empty_list_if_zero_records=False))
-                n_ins = tbl.num_rows
-                ins_row = _arrow_min_max(tbl, ins_checks)
-                inserts = arrow_frame(spark, tbl, inserts.schema)
-            else:
-                # ONE agg job over the persisted insert frame yields the
-                # count AND the revision-space bounds
-                inserts = inserts.persist()
-                pins.append(inserts)
-                ins_row = inserts.agg(
-                    F.count(F.lit(1)).alias("__n_ins"),
-                    *_space_min_max_aggs(ins_checks)).first()
-                n_ins = int(ins_row["__n_ins"])
+            # ONE agg job over the persisted insert frame yields the count
+            # AND the revision-space bounds
+            inserts = inserts.persist()
+            pins.append(inserts)
+            ins_row = inserts.agg(
+                F.count(F.lit(1)).alias("__n_ins"),
+                *_space_min_max_aggs(ins_checks)).first()
+            n_ins = int(ins_row["__n_ins"])
             ins_violation = _space_violation_of_row(ins_checks, ins_row) \
                 if n_ins else None
 
@@ -1242,15 +1254,16 @@ def merge_rows(spark, path: str, source, on,
         post = None                 # post-image of the matched rows
         cdc_frames = []             # (changed-rows frame, _change_type)
         if matched:
-            pre = matches.select(*tcols)
             cur = qt._df_for_files(matched) if mode != "dv" else None
             if when_matched_delete:
                 if cur is not None:
                     updated = cur.join(source.select(*keys).distinct(),
                                        keys, "left_anti")
-                cdc_frames.append((pre, "delete"))
+                if cdf:
+                    cdc_frames.append((matches.select(*tcols), "delete"))
             else:
-                post = _to_target_schema(matches, assignments, keep=True)
+                if wide:
+                    post = _to_target_schema(matches, assignments, keep=True)
                 if cur is not None:
                     joined = cur.join(
                         src.withColumn("__src__m", F.lit(True)), keys,
@@ -1259,8 +1272,10 @@ def merge_rows(spark, path: str, source, on,
                     updated = _to_target_schema(joined, {
                         c: F.when(hit, e).otherwise(F.col(c))
                         for c, e in assignments.items()}, keep=True)
-                cdc_frames.append((pre, "update_preimage"))
-                cdc_frames.append((post, "update_postimage"))
+                if cdf:
+                    cdc_frames.append((matches.select(*tcols),
+                                       "update_preimage"))
+                    cdc_frames.append((post, "update_postimage"))
 
         if not matched and n_ins == 0:
             version = None
@@ -1385,16 +1400,6 @@ def _spark_min_max(values) -> Tuple[Any, Any]:
     if len(nums) < len(vals):
         return (min(nums) if nums else float("nan")), float("nan")
     return (min(nums), max(nums)) if nums else (None, None)
-
-
-def _arrow_min_max(tbl, checks) -> Dict[str, Any]:
-    """The ``mn_<col>``/``mx_<col>`` row ``_space_min_max_aggs`` computes,
-    over a driver-side Arrow table."""
-    out: Dict[str, Any] = {}
-    for name, _t in checks:
-        out[f"mn_{name}"], out[f"mx_{name}"] = _spark_min_max(
-            tbl.column(name).to_pylist())
-    return out
 
 
 def _space_min_max_aggs(checks):

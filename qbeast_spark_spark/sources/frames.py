@@ -6,7 +6,9 @@ it runs a Python-worker stage, even when the frame holds no rows. Over
 a ``pyarrow.Table`` the rows are shipped to the JVM once, at creation,
 and the plan is a ``LocalTableScan`` with no job of its own. Every
 frame the DML, deletion-vector and compaction paths build on the driver
-goes through here.
+goes through here. ``arrow_frame`` exists for its type check: a caller
+that hands it a list or a pandas frame fails at once instead of
+silently planning a Python RDD.
 """
 
 from __future__ import annotations

@@ -388,13 +388,12 @@ def test_small_dv_cache_evicts_stopped_sessions(spark, tmp_path):
 def test_dv_mask_driver_lane_matches_executor_lane(spark, dv_table,
                                                    monkeypatch):
     """``_dv_mask_adds`` builds masks on the driver for at most
-    ``_SMALL_DV_MAX_POSITIONS`` hits and on executors above it. Both lanes
+    ``_DRIVER_MASK_MAX_HITS`` hits and on executors above it. Both lanes
     must give the same bitmaps, cardinalities and new-delete counts: for
     a file that already has a DV (re-masked positions are a no-op),
     duplicate positions, and an empty hit set."""
     from pyspark.sql.group import GroupedData
 
-    from qbeast_spark_spark.sources import deletion_vectors as DVm
     from qbeast_spark_spark.sources import dml
     from qbeast_spark_spark.sources.deletion_vectors import (
         _file_uri, descriptor_positions)
@@ -428,7 +427,7 @@ def test_dv_mask_driver_lane_matches_executor_lane(spark, dv_table,
     monkeypatch.setattr(GroupedData, "applyInPandas", spy)
 
     def run(cap, frame, n_hits, rels):
-        monkeypatch.setattr(DVm, "_SMALL_DV_MAX_POSITIONS", cap)
+        monkeypatch.setattr(dml, "_DRIVER_MASK_MAX_HITS", cap)
         grouped.clear()
         adds, new = dml._dv_mask_adds(qt, snap, rels, frame, n_hits)
         got = {a.path: (a.dv["cardinality"], descriptor_positions(

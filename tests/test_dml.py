@@ -4,7 +4,6 @@ the reference hands to DeltaTable, after which its docs say the table
 
 import os
 
-import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -837,8 +836,8 @@ def _upsert_source(li):
 
 def test_merge_dv_upsert_runs_one_match_pass(spark, keyed):
     """A dv-mode upsert into a DV'd target scans the target once: the key
-    box, the match pass, the insert collect, the mask and the write stay
-    within 12 Spark jobs."""
+    box, the match pass, the insert aggregate, the mask and the write stay
+    within 14 Spark jobs (two passes ran 23)."""
     path, li = keyed
     qt, live = _dv_target(spark, path, li)
     src = _upsert_source(li)
@@ -853,7 +852,7 @@ def test_merge_dv_upsert_runs_one_match_pass(spark, keyed):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("merge-one-pass")
-    assert len(jobs) <= 12, len(jobs)
+    assert len(jobs) <= 14, len(jobs)
     assert out["rows_updated"] == n_upd and out["rows_inserted"] == n_ins
     assert out["files_dv"] >= 1 and out["files_rewritten"] == 0
     want = (live.where("NOT l_orderkey BETWEEN 1000 AND 1100")
@@ -878,14 +877,8 @@ def test_merge_multiple_match_raises_before_writing(spark, keyed, mode):
     assert qt.snapshot(refresh=True).version == version
 
 
-@pytest.mark.parametrize("lane", ["driver", "persisted"])
-def test_merge_null_keys_insert(spark, tmp_table, monkeypatch, lane):
-    """NULL source keys never match, so they insert — in the driver
-    insert lane and in the persisted one above its bound."""
-    from qbeast_spark_spark.sources import dml
-
-    if lane == "persisted":
-        monkeypatch.setattr(dml, "DRIVER_MAX_WRITE_ROWS", 0)
+def test_merge_null_keys_insert(spark, tmp_table):
+    """NULL source keys never match, so they insert."""
     df = spark.createDataFrame([(i, float(i)) for i in range(20)],
                                "k long, v double")
     qss.write(df, tmp_table, columns_to_index=["k"], cube_size=10)
@@ -920,35 +913,24 @@ def test_merge_insert_only_into_dv_target(spark, keyed):
     assert got.exceptAll(want).count() == 0
 
 
-@pytest.mark.parametrize("ansi", ["true", "false"])
-def test_arrow_min_max_matches_spark(spark, ansi):
-    """The driver insert lane's space bounds follow Spark's min/max:
-    NULLs skipped, NaN above every number."""
-    from pyspark.sql import types as T
+def test_merge_match_frame_pins_only_what_is_read(spark, keyed,
+                                                  monkeypatch):
+    """Without CDF, a matched-delete merge reads only the keys, the file
+    and the position of its matched rows, so only those are persisted."""
+    path, li = keyed
+    qt = qss.QbeastTable.for_path(spark, path)
+    pinned = []
+    orig = type(li).persist
 
-    from qbeast_spark_spark.core.transform import LinearTransformation
-    from qbeast_spark_spark.sources.dml import (_arrow_min_max,
-                                                _space_min_max_aggs)
+    def spy(self, *a, **k):
+        pinned.append(self.columns)
+        return orig(self, *a, **k)
 
-    nan, inf = float("nan"), float("inf")
-    cases = [[1.0, nan, 3.0, None], [nan, nan], [None, None], [],
-             [-inf, 2.0], [inf, nan, -0.0], [0.0, -0.0]]
-    prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", ansi)
-    try:
-        for vals in cases:
-            df = spark.createDataFrame(
-                [(v, i) for i, v in enumerate(vals)],
-                T.StructType([T.StructField("x", T.DoubleType()),
-                              T.StructField("n", T.LongType())]))
-            checks = [("x", LinearTransformation(0.0, 1.0)),
-                      ("n", LinearTransformation(0.0, 1.0))]
-            row = df.agg(*_space_min_max_aggs(checks)).first().asDict()
-            tbl = pa.Table.from_batches(df._collect_as_arrow(
-                empty_list_if_zero_records=False))
-            got = _arrow_min_max(tbl, checks)
-            # NaN compared as a token; -0.0 == 0.0 as in the bounds check
-            assert {k: "nan" if v != v else v for k, v in got.items()} == \
-                {k: "nan" if v != v else v for k, v in row.items()}, vals
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
+    monkeypatch.setattr(type(li), "persist", spy)
+    src = li.where("l_orderkey BETWEEN 1000 AND 1100")
+    n = src.count()
+    out = qt.merge(src, on="id", when_matched_delete=True)
+    assert out["rows_deleted"] == n
+    assert [c for c in pinned if "_f" in c] == [["id", "_f", "_ri"]]
+    assert qt.to_df().count() == li.count() - n
+    assert qt.to_df().where("l_orderkey BETWEEN 1000 AND 1100").count() == 0
