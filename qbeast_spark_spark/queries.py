@@ -430,8 +430,8 @@ def qb_sql_view(spark, sf_dir):
     """)
     # r11: SELF-join branch — the same table under two aliases, each
     # occurrence pruned from ITS alias-qualified conjuncts
-    # (catalog._self_join_predicates; reference behavior
-    # QuerySpecBuilder.scala:51-77 attributes filters per relation)
+    # (catalog._table_refs attributes WHERE conjuncts per relation, the
+    # reference's QuerySpecBuilder.scala:51-77 behavior)
     selfjoin = cat.sql("""
         SELECT 'selfjoin' AS src, a.l_returnflag,
                COUNT(*) AS n,

@@ -326,7 +326,7 @@ def test_pyds_where_lane_equals_plain_spark(spark, tmp_path_factory):
 
 def test_qsql_join_lift_lane_equals_plain_spark(spark, tmp_path_factory):
     """r8: the random predicate grammar driven through the qsql JOIN
-    WHERE lift (catalog._join_table_predicate): the indexed table joined
+    WHERE lift (catalog._table_refs): the indexed table joined
     to a plain dimension, the WHERE mixing qbeast-column conjuncts
     (randomly alias-qualified — exercising the qualifier strip) with
     dimension conjuncts. Soundness contract: the statement's result must

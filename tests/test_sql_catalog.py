@@ -849,6 +849,78 @@ def join_cat(spark, cat):
     return cat
 
 
+def _qb_files(df, table="qli"):
+    """Basenames of the ``table`` files ``df`` reads."""
+    return {os.path.basename(f) for f in df.inputFiles()
+            if f"/{table}/" in f}
+
+
+def _candidates(spark, cat, table, *preds):
+    """Files prune_files keeps for any of ``preds`` (one per occurrence;
+    None or an untranslatable one keeps every file)."""
+    from qbeast_spark_spark import QbeastTable
+    from qbeast_spark_spark.sources.predicates import to_dnf_filters
+    from qbeast_spark_spark.sources.reader import prune_files
+
+    snap = QbeastTable(spark, cat.tables()[table]["location"]) \
+        .snapshot(refresh=True)
+    keep = set()
+    for pred in preds:
+        dnf = to_dnf_filters(pred) if pred else None
+        if dnf is None:
+            keep.update(snap.files)
+        for conj in dnf or []:
+            keep.update(prune_files(snap, conj))
+    return {os.path.basename(p) for p in keep}
+
+
+def _scan_files(df, table="qli"):
+    """One set of file basenames per scan of ``table`` in ``df``'s
+    optimized plan, in plan order (IN/EXISTS bodies are joins there)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    scans = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        files = {os.path.basename(f)
+                 for f in leaf.relation().location().inputFiles()
+                 if f"/{table}/" in f}
+        if files:
+            scans.append(files)
+    return scans
+
+
+def _assert_scans(spark, cat, stmt, *preds, table="qli"):
+    """Run ``stmt`` through the catalog: its rows must equal plain
+    Spark's over the source views (li_src / ord_src). Then one entry of
+    ``preds`` per scan of ``table``, in plan order: None — a guarded
+    occurrence reads every file; a predicate — a lifted occurrence
+    reads only prune_files' candidates for it (so strictly fewer files
+    whenever the predicate prunes at all). Returns the catalog's
+    DataFrame."""
+    got = _sql_matches_plain(spark, cat, stmt)
+    every = _candidates(spark, cat, table, None)
+    scans = _scan_files(got, table)
+    assert len(scans) == len(preds), (len(scans), stmt)
+    for files, pred in zip(scans, preds):
+        want = every if pred is None else _candidates(spark, cat, table,
+                                                      pred)
+        assert files <= want and (pred or files == every), (pred, stmt)
+    return got
+
+
+def _sql_matches_plain(spark, cat, stmt):
+    import re
+    from collections import Counter
+
+    got = cat.sql(stmt)
+    plain = re.sub(r"\bqord\b", "ord_src", re.sub(r"\bqli\b", "li_src", stmt))
+    assert Counter(map(tuple, got.collect())) \
+        == Counter(map(tuple, spark.sql(plain).collect())), stmt
+    return got
+
+
 def test_join_where_lift_prunes_files(spark, join_cat):
     """r7 verdict task 1: a single-qbeast-table JOIN with a selective
     WHERE on the indexed column must read strictly fewer files than the
@@ -916,10 +988,10 @@ def test_outer_join_null_probe_is_never_lifted(spark, join_cat):
     cat = join_cat
     li = load(spark, "lineitem")
     orders = load(spark, "orders")
-    assert cat._join_table_predicate(
-        "SELECT * FROM plain_orders o LEFT JOIN qli t "
-        "ON o.o_orderkey = t.l_orderkey WHERE t.l_orderkey IS NULL",
-        cat.tables()) == {}
+    _assert_scans(spark, cat,
+                  "SELECT * FROM plain_orders o LEFT JOIN qli t "
+                  "ON o.o_orderkey = t.l_orderkey "
+                  "WHERE t.l_orderkey IS NULL", None)
     got = cat.sql(
         "SELECT COUNT(*) AS n FROM plain_orders o LEFT JOIN qli t "
         "ON o.o_orderkey = t.l_orderkey "
@@ -932,40 +1004,42 @@ def test_outer_join_null_probe_is_never_lifted(spark, join_cat):
 def test_join_lift_shape_guards(spark, join_cat):
     """The attributable-shape guards, pinned one by one."""
     cat = join_cat
-    entries = cat.tables()
-    jp = cat._join_table_predicate
-    # self-join: two occurrences -> not attributable
-    assert jp("SELECT * FROM qli a JOIN qli b ON a.l_orderkey = "
-              "b.l_orderkey WHERE a.l_orderkey < 10", entries) == {}
-    # set-op branches -> the found WHERE may belong to another branch
-    assert jp("SELECT * FROM qli t JOIN plain_orders o ON t.l_orderkey "
-              "= o.o_orderkey WHERE t.l_orderkey < 10 "
-              "UNION ALL SELECT * FROM other", entries) == {}
-    # RIGHT JOIN -> rejected
-    assert jp("SELECT * FROM qli t RIGHT JOIN plain_orders o ON "
-              "t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 10",
-              entries) == {}
-    # subquery in the predicate -> rejected
-    assert jp("SELECT * FROM qli t JOIN plain_orders o ON t.l_orderkey "
-              "= o.o_orderkey WHERE t.l_orderkey IN "
-              "(SELECT o_orderkey FROM plain_orders)", entries) == {}
-    # alias in table position (not actually the qbeast table) -> skipped
-    assert jp("SELECT * FROM range(10) qli JOIN plain_orders o ON "
-              "qli.id = o.o_orderkey WHERE qli.id < 5", entries) == {}
-    # the happy inner-join shape IS attributed, alias-stripped
-    got = jp("SELECT * FROM qli t JOIN plain_orders o ON t.l_orderkey "
-             "= o.o_orderkey WHERE t.l_orderkey < 10 AND o.o_custkey > 2",
-             entries)
-    assert "qli" in got
-    pred, has_alias = got["qli"]
-    assert has_alias and "t.l_orderkey" not in pred \
-        and "l_orderkey < 10" in pred and "o.o_custkey > 2" in pred
+    # self-join: the unconstrained occurrence b reads every file
+    _assert_scans(spark, cat,
+                  "SELECT * FROM qli a JOIN qli b ON a.l_orderkey = "
+                  "b.l_orderkey WHERE a.l_orderkey < 10",
+                  "l_orderkey < 10", None)
+    # set-op branches: one branch's WHERE never reaches the other's scan
+    _assert_scans(spark, cat,
+                  "SELECT t.l_orderkey FROM qli t JOIN plain_orders o "
+                  "ON t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 10 "
+                  "UNION ALL SELECT l_orderkey FROM qli",
+                  "l_orderkey < 10", None)
+    # RIGHT JOIN null-extends the qbeast side -> no lift
+    _assert_scans(spark, cat,
+                  "SELECT * FROM qli t RIGHT JOIN plain_orders o ON "
+                  "t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 10",
+                  None)
+    # a subquery conjunct cannot prune
+    _assert_scans(spark, cat,
+                  "SELECT * FROM qli t JOIN plain_orders o ON t.l_orderkey "
+                  "= o.o_orderkey WHERE t.l_orderkey IN "
+                  "(SELECT o_orderkey FROM plain_orders)", None)
+    # an alias spelled like the table is not a reference to it
+    got = _sql_matches_plain(
+        spark, cat, "SELECT * FROM range(10) qli JOIN plain_orders o ON "
+                    "qli.id = o.o_orderkey WHERE qli.id < 5")
+    assert _qb_files(got) == set()
+    # the happy inner-join shape prunes, alias-qualified
+    _assert_scans(spark, cat,
+            "SELECT * FROM qli t JOIN plain_orders o ON t.l_orderkey "
+            "= o.o_orderkey WHERE t.l_orderkey < 10 AND o.o_custkey > 2",
+            "l_orderkey < 10")
     # comma (cross) join with trailing name-qualified conjunct
-    got = jp("SELECT * FROM plain_orders, qli "
-             "WHERE qli.l_orderkey = plain_orders.o_orderkey "
-             "AND qli.l_orderkey < 10", entries)
-    assert got["qli"][1] is False \
-        and "qli.l_orderkey" not in got["qli"][0]
+    _assert_scans(spark, cat,
+            "SELECT * FROM plain_orders, qli "
+            "WHERE qli.l_orderkey = plain_orders.o_orderkey "
+            "AND qli.l_orderkey < 10", "l_orderkey < 10")
 
 
 @pytest.fixture()
@@ -1009,15 +1083,11 @@ def test_multi_qbeast_join_lift_name_qualified(spark, two_qb_cat):
     column) while each table's own conjuncts prune its files."""
     cat = two_qb_cat
     li, orders = load(spark, "lineitem"), load(spark, "orders")
-    got = cat._join_table_predicate(
-        "SELECT * FROM qli JOIN qord ON qli.l_orderkey = qord.o_orderkey "
-        "WHERE qli.l_orderkey < 150 AND qord.o_orderkey < 250",
-        cat.tables())
-    assert set(got) == {"qli", "qord"}
-    assert "l_orderkey < 150" in got["qli"][0] \
-        and "qord.o_orderkey" in got["qli"][0]
-    assert "o_orderkey < 250" in got["qord"][0] \
-        and "qli.l_orderkey" in got["qord"][0]
+    stmt = ("SELECT * FROM qli JOIN qord "
+            "ON qli.l_orderkey = qord.o_orderkey "
+            "WHERE qli.l_orderkey < 150 AND qord.o_orderkey < 250")
+    _assert_scans(spark, cat, stmt, "l_orderkey < 150")
+    _assert_scans(spark, cat, stmt, "o_orderkey < 250", table="qord")
     pruned = cat.sql(
         "SELECT qli.l_orderkey FROM qli "
         "JOIN qord ON qli.l_orderkey = qord.o_orderkey "
@@ -1054,17 +1124,12 @@ def test_self_join_lift_prunes_both_occurrences(spark, join_cat):
     relation). The time-range self-join shape."""
     cat = join_cat
     li = load(spark, "lineitem")
-    slots = cat._self_join_predicates(
-        "SELECT a.l_orderkey FROM qli a JOIN qli b "
-        "ON a.l_orderkey = b.l_orderkey "
-        "WHERE a.l_orderkey < 200 AND b.l_orderkey >= 100 "
-        "AND b.l_orderkey < 400", cat.tables())
-    assert "qli" in slots and len(slots["qli"]) == 2
-    (pa, ha), (pb, hb) = slots["qli"]
-    assert ha and hb
-    assert "l_orderkey < 200" in pa and "b.l_orderkey" in pa
-    assert "l_orderkey >= 100" in pb and "l_orderkey < 400" in pb \
-        and "a.l_orderkey" in pb
+    _assert_scans(spark, cat,
+            "SELECT a.l_orderkey FROM qli a JOIN qli b "
+            "ON a.l_orderkey = b.l_orderkey "
+            "WHERE a.l_orderkey < 200 AND b.l_orderkey >= 100 "
+            "AND b.l_orderkey < 400",
+            "l_orderkey < 200", "l_orderkey >= 100 AND l_orderkey < 400")
     full = cat.sql("SELECT a.l_orderkey FROM qli a JOIN qli b "
                    "ON a.l_orderkey = b.l_orderkey")
     pruned = cat.sql(
@@ -1109,33 +1174,34 @@ def test_self_join_lift_comma_shape_and_values(spark, join_cat):
 
 def test_self_join_lift_guards(spark, join_cat):
     """Per-occurrence guards for the self-join lane, pinned one by
-    one: unaliased occurrence -> no lift for it; LEFT-JOIN right side
-    -> no lift; results stay exact on the mixed shape."""
+    one: an unaliased occurrence lifts under its table-name qualifier;
+    a null-extended occurrence reads every file; results stay exact on
+    the mixed shape."""
     cat = join_cat
-    entries = cat.tables()
-    sj = cat._self_join_predicates
-    # second occurrence unaliased -> only the first lifts
-    slots = sj("SELECT a.l_orderkey FROM qli a JOIN qli "
-               "ON a.l_orderkey = qli.l_orderkey "
-               "WHERE a.l_orderkey < 100 AND qli.l_orderkey < 100",
-               entries)
-    assert slots["qli"][0] is not None and slots["qli"][1] is None
-    # LEFT JOIN null-extends the right occurrence -> its slot is None
-    slots = sj("SELECT a.l_orderkey FROM qli a LEFT JOIN qli b "
-               "ON a.l_orderkey = b.l_orderkey "
-               "WHERE a.l_orderkey < 100 AND b.l_extendedprice > 0",
-               entries)
-    assert slots["qli"][0] is not None and slots["qli"][1] is None
+    # second occurrence unaliased -> both lift, each by its own qualifier
+    _assert_scans(spark, cat,
+                  "SELECT a.l_orderkey FROM qli a JOIN qli "
+                  "ON a.l_orderkey = qli.l_orderkey "
+                  "WHERE a.l_orderkey < 100 AND qli.l_orderkey < 100",
+                  "l_orderkey < 100", "l_orderkey < 100")
+    # LEFT JOIN null-extends the right occurrence -> it reads every file
+    _assert_scans(spark, cat,
+                  "SELECT a.l_orderkey FROM qli a LEFT JOIN qli b "
+                  "ON a.l_orderkey = b.l_orderkey "
+                  "WHERE a.l_orderkey < 100 AND b.l_extendedprice > 0",
+                  "l_orderkey < 100", None)
     # RIGHT JOIN after the first occurrence null-extends it
-    slots = sj("SELECT b.l_orderkey FROM qli a RIGHT JOIN qli b "
-               "ON a.l_orderkey = b.l_orderkey "
-               "WHERE b.l_orderkey < 100", entries)
-    assert slots["qli"][0] is None and slots["qli"][1] is not None
-    # set-op branch -> no lift at all
-    assert sj("SELECT a.l_orderkey FROM qli a JOIN qli b "
-              "ON a.l_orderkey = b.l_orderkey WHERE a.l_orderkey < 10 "
-              "UNION ALL SELECT l_orderkey FROM plain_orders",
-              entries) == {}
+    _assert_scans(spark, cat,
+                  "SELECT b.l_orderkey FROM qli a RIGHT JOIN qli b "
+                  "ON a.l_orderkey = b.l_orderkey "
+                  "WHERE b.l_orderkey < 100", None, "l_orderkey < 100")
+    # set-op: the first branch's WHERE never prunes the second's scan
+    _assert_scans(spark, cat,
+                  "SELECT a.l_orderkey FROM qli a JOIN qli b "
+                  "ON a.l_orderkey = b.l_orderkey WHERE a.l_orderkey < 10 "
+                  "AND b.l_orderkey < 10 "
+                  "UNION ALL SELECT l_orderkey FROM qli",
+                  "l_orderkey < 10", "l_orderkey < 10", None)
     # mixed LEFT self-join end-to-end: IS NULL probe on the
     # null-extended side must return exact anti-join semantics
     li = load(spark, "lineitem")
@@ -1163,8 +1229,7 @@ def test_cte_self_join_lift(spark, join_cat):
             "WHERE a.l_orderkey < 250 AND b.l_quantity > 10) "
             "SELECT k, COUNT(*) AS n, SUM(q) AS sq FROM pairs "
             "GROUP BY k ORDER BY k")
-    slots = cat._cte_self_join_predicates(stmt, cat.tables())
-    assert "qli" in slots and all(s is not None for s in slots["qli"])
+    _assert_scans(spark, cat, stmt, "l_orderkey < 250", "l_quantity > 10")
     got = cat.sql(stmt)
     a, b = li.alias("a"), li.alias("b")
     exp = (a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1182,8 +1247,8 @@ def test_cte_self_join_lift(spark, join_cat):
              "JOIN qli b ON a.l_orderkey = b.l_orderkey "
              "WHERE a.l_orderkey < 250) "
              "SELECT p.k FROM pairs p JOIN qli c ON p.k = c.l_orderkey")
-    assert cat._cte_self_join_predicates(stmt2, cat.tables()) == {}
-    # ... and the statement still returns exact rows via the bare view
+    _assert_scans(spark, cat, stmt2, "l_orderkey < 250", None, None)
+    # ... and the statement still returns exact rows
     got2 = cat.sql(stmt2).count()
     pairs = (a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
              .where("a.l_orderkey < 250")
@@ -1242,19 +1307,18 @@ def test_cte_main_query_lift(spark, join_cat):
             "SELECT COUNT(*) AS n FROM qli a JOIN qli b "
             "ON a.l_orderkey = b.l_orderkey "
             "WHERE a.l_orderkey < 180 AND b.l_quantity > 10")
-    slots = cat._cte_self_join_predicates(stmt, cat.tables())
-    assert "qli" in slots and all(s is not None for s in slots["qli"])
+    _assert_scans(spark, cat, stmt, "l_orderkey < 180", "l_quantity > 10")
     a, b = li.alias("a"), li.alias("b")
     exp = (a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
            .where("a.l_orderkey < 180 AND b.l_quantity > 10").count())
     assert cat.sql(stmt).collect()[0].n == exp
-    # a reference in BOTH a CTE body and the main query -> no lift,
-    # exact rows via the bare view
+    # a reference in BOTH a CTE body and the main query: each
+    # occurrence lifts from its own WHERE, rows exact
     stmt2 = ("WITH top AS (SELECT l_orderkey FROM qli "
              "WHERE l_orderkey < 120) "
              "SELECT COUNT(*) AS n FROM qli q JOIN top t "
              "ON q.l_orderkey = t.l_orderkey WHERE q.l_quantity > 5")
-    assert cat._cte_table_predicate(stmt2, cat.tables()) == {}
+    _assert_scans(spark, cat, stmt2, "l_quantity > 5", "l_orderkey < 120")
     keys = li.filter("l_orderkey < 120").select("l_orderkey")
     exp2 = (li.alias("q").join(keys.alias("t"),
                                F.col("q.l_orderkey")
@@ -1269,13 +1333,10 @@ def test_subquery_lift_exists_correlated(spark, join_cat):
     alias) only widens; results equal the plain-Spark semi-join."""
     cat = join_cat
     li, orders = load(spark, "lineitem"), load(spark, "orders")
-    slots = cat._subquery_predicates(
-        "SELECT o.o_orderkey FROM plain_orders o WHERE EXISTS ("
-        "SELECT 1 FROM qli t WHERE t.l_orderkey = o.o_orderkey "
-        "AND t.l_orderkey < 200)", cat.tables())
-    assert "qli" in slots and slots["qli"][0] is not None
-    pred = slots["qli"][0][0]
-    assert "l_orderkey < 200" in pred
+    _assert_scans(spark, cat,
+                  "SELECT o.o_orderkey FROM plain_orders o WHERE EXISTS ("
+                  "SELECT 1 FROM qli t WHERE t.l_orderkey = o.o_orderkey "
+                  "AND t.l_orderkey < 200)", "l_orderkey < 200")
     full_n = len(cat.sql("SELECT * FROM qli").inputFiles())
     got_df = cat.sql(
         "SELECT o.o_orderkey FROM plain_orders o WHERE EXISTS ("
@@ -1339,10 +1400,9 @@ def test_subquery_lift_derived_table(spark, join_cat):
     assert got_m == exp_m
 
 
-def test_subquery_lift_sibling_spans_fall_back(spark, join_cat):
-    """The same table referenced from TWO sibling subqueries is not
-    attributable (occurrence ordinals can't align) — no lift, exact
-    rows via the bare view."""
+def test_subquery_lift_sibling_spans(spark, join_cat):
+    """The same table referenced from TWO sibling subqueries: each body
+    prunes its own scan from its own WHERE, rows exact."""
     cat = join_cat
     li, orders = load(spark, "lineitem"), load(spark, "orders")
     stmt = ("SELECT COUNT(*) AS n FROM plain_orders WHERE "
@@ -1350,7 +1410,10 @@ def test_subquery_lift_sibling_spans_fall_back(spark, join_cat):
             "WHERE l_orderkey < 100) "
             "OR o_orderkey IN (SELECT l_orderkey FROM qli "
             "WHERE l_orderkey >= 9000)")
-    assert cat._subquery_predicates(stmt, cat.tables()) == {}
+    files = _qb_files(_sql_matches_plain(spark, cat, stmt))
+    assert 0 < len(files) < len(_candidates(spark, cat, "qli", None))
+    assert files <= _candidates(spark, cat, "qli", "l_orderkey < 100",
+                                "l_orderkey >= 9000")
     got = cat.sql(stmt).collect()[0].n
     k1 = {r.l_orderkey for r in li.filter("l_orderkey < 100")
           .select("l_orderkey").distinct().collect()}
@@ -1370,9 +1433,7 @@ def test_subquery_lift_self_join_in_derived(spark, join_cat):
     stmt = ("SELECT AVG(q) AS aq FROM (SELECT b.l_quantity AS q "
             "FROM qli a JOIN qli b ON a.l_orderkey = b.l_orderkey "
             "WHERE a.l_orderkey < 220 AND b.l_quantity > 8) s")
-    slots = cat._subquery_predicates(stmt, cat.tables())
-    assert "qli" in slots and len(slots["qli"]) == 2 \
-        and all(x is not None for x in slots["qli"])
+    _assert_scans(spark, cat, stmt, "l_orderkey < 220", "l_quantity > 8")
     got = cat.sql(stmt).collect()[0].aq
     a, b = li.alias("a"), li.alias("b")
     exp = (a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1474,19 +1535,16 @@ def test_or_precedence_never_narrows_the_pruning_hint(spark, cat):
     AND handed prune_scan '(a OR b) AND (c)' — NARROWER than the real
     predicate (files with a-only rows silently dropped). A top-level OR
     now makes the hint whole-text-or-nothing."""
-    from qbeast_spark_spark.sources.catalog import _prunable_conjuncts
-
-    got = _prunable_conjuncts("a = 1 OR b = 2 AND c = 3")
-    assert got is None or got.strip() == "a = 1 OR b = 2 AND c = 3"
-    # end-to-end: rows satisfying only the OR's left arm must survive
+    # rows satisfying only the OR's left arm must survive
     li = load(spark, "lineitem")
     li.createOrReplaceTempView("li_src2")
     cat.sql("CREATE TABLE qor USING qbeast OPTIONS "
             "('columnsToIndex'='l_orderkey', cubeSize=400) "
             "AS SELECT * FROM li_src2")
-    got_n = cat.sql(
-        "SELECT * FROM qor WHERE l_orderkey < 50 "
-        "OR l_orderkey >= 1400 AND l_quantity > 10").count()
+    pred = "l_orderkey < 50 OR l_orderkey >= 1400 AND l_quantity > 10"
+    got = cat.sql(f"SELECT * FROM qor WHERE {pred}")
+    assert _qb_files(got, "qor") <= _candidates(spark, cat, "qor", pred)
+    got_n = got.count()
     exp_n = li.filter("l_orderkey < 50 "
                       "OR l_orderkey >= 1400 AND l_quantity > 10").count()
     assert got_n == exp_n
@@ -1495,18 +1553,17 @@ def test_or_precedence_never_narrows_the_pruning_hint(spark, cat):
 def test_unbalanced_pred_slice_never_lifts(spark, cat):
     """Predicate text that sliced past its clause (unbalanced parens)
     must never be salvaged into a pruning hint."""
-    from qbeast_spark_spark.sources.catalog import _prunable_conjuncts
-
-    assert _prunable_conjuncts("x < 3 AND y = 2 OR z = 1) s WHERE w = 4") \
-        is None
-    assert _prunable_conjuncts("x < 3 AND (y = 2") is None
-    # the statement shape that produced such a slice stays correct
+    # the statement shape that produced such a slice stays correct:
+    # the body's OR is one conjunct, the outer WHERE stops at the
+    # derived table's projection
     cat.sql("CREATE TABLE ub (x INT, y INT, z INT, w INT) USING qbeast "
             "OPTIONS ('columnsToIndex'='x')")
     cat.sql("INSERT INTO ub VALUES (1, 2, 0, 4), (9, 9, 1, 4)")
-    got = cat.sql("SELECT * FROM (SELECT * FROM ub WHERE x < 3 AND y = 2 "
-                  "OR z = 1) s WHERE w = 4").count()
-    assert got == 2
+    df = cat.sql("SELECT * FROM (SELECT * FROM ub WHERE x < 3 AND y = 2 "
+                 "OR z = 1) s WHERE w = 4")
+    assert _qb_files(df, "ub") <= _candidates(
+        spark, cat, "ub", "x < 3 AND y = 2 OR z = 1")
+    assert df.count() == 2
 
 
 def test_backticked_twin_reference_disables_lift(spark, cat):
@@ -1541,11 +1598,6 @@ def test_nospace_backtick_twin_disables_lift(spark, cat):
     """Third review pass: Spark lexes FROM`bt` (no whitespace) as a
     reference too — the occurrence count must see it, or one set-op
     branch's WHERE prunes the other's scan."""
-    from qbeast_spark_spark.sources.catalog import _name_occurrences
-
-    assert _name_occurrences(
-        "bt", "SELECT x FROM`bt` WHERE y = 1 "
-              "UNION ALL SELECT x FROM bt WHERE x < 3") == 2
     cat.sql("CREATE TABLE bt2 (x INT, y INT) USING qbeast "
             "OPTIONS ('columnsToIndex'='x')")
     cat.sql("INSERT INTO bt2 VALUES (1, 0), (100, 1)")
@@ -1555,16 +1607,81 @@ def test_nospace_backtick_twin_disables_lift(spark, cat):
     assert sorted(r.x for r in got.collect()) == [1, 100]
 
 
+def test_default_qualified_select_binds_the_table(spark, cat):
+    """``default.name`` denotes the catalog table in a query, as it does
+    in INSERT; its WHERE still prunes."""
+    cat.sql("CREATE TABLE dq (x INT, y INT) USING qbeast "
+            "OPTIONS ('columnsToIndex'='x', cubeSize=10)")
+    spark.range(100).selectExpr("CAST(id AS INT) AS x",
+                                "CAST(id % 7 AS INT) AS y") \
+        .createOrReplaceTempView("dq_src")
+    for lo, hi in ((0, 40), (40, 70), (70, 100)):   # a file per insert
+        cat.sql(f"INSERT INTO dq SELECT * FROM dq_src "
+                f"WHERE x >= {lo} AND x < {hi}")
+    every = _candidates(spark, cat, "dq", None)
+    got = cat.sql("SELECT x FROM default.dq WHERE x < 5")
+    assert sorted(r.x for r in got.collect()) == [0, 1, 2, 3, 4]
+    assert 0 < len(_qb_files(got, "dq")) < len(every)
+    got = cat.sql("SELECT dq.y FROM default.dq WHERE dq.x = 9")
+    assert [r.y for r in got.collect()] == [2]
+    assert cat.sql("SELECT COUNT(*) AS n FROM default.dq") \
+        .collect()[0].n == 100
+
+
+def test_backticked_reference_without_prior_mount(spark, cat):
+    """A backticked reference binds the table by itself — no earlier
+    bare statement has to mount the view first."""
+    cat.sql("CREATE TABLE bq (x INT, y INT) USING qbeast "
+            "OPTIONS ('columnsToIndex'='x')")
+    cat.sql("INSERT INTO bq VALUES (1, 0), (100, 1), (3, 1)")
+    spark.catalog.dropTempView("bq")
+    got = cat.sql("SELECT x FROM `bq` WHERE x < 5")
+    assert sorted(r.x for r in got.collect()) == [1, 3]
+
+
+def test_cte_name_shadows_catalog_table(spark, join_cat):
+    """A CTE named like a catalog table shadows it: no file of the
+    table is read and the rows equal plain Spark's."""
+    cat = join_cat
+    stmt = ("WITH qli AS (SELECT o_orderkey AS l_orderkey, o_custkey "
+            "FROM plain_orders WHERE o_orderkey < 400) "
+            "SELECT l_orderkey, o_custkey FROM qli WHERE l_orderkey > 100")
+    got = cat.sql(stmt)
+    assert _qb_files(got) == set()
+    assert sorted(map(tuple, got.collect())) \
+        == sorted(map(tuple, spark.sql(stmt).collect()))
+
+
+def test_dml_qualifiers_cut_at_attribute_spans(spark, cat):
+    """DELETE/UPDATE/MERGE read the target's alias or ``default.``
+    qualifier from the parse; string literals shaped like a qualified
+    column stay untouched."""
+    cat.sql("CREATE TABLE dm (id INT, g STRING) USING qbeast "
+            "OPTIONS ('columnsToIndex'='id')")
+    cat.sql("INSERT INTO dm VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd')")
+    cat.sql("DELETE FROM dm AS x WHERE x.id = 4")
+    cat.sql("UPDATE default.dm SET g = concat(dm.g, 'dm.g') "
+            "WHERE dm.id BETWEEN 2 AND 3")
+    spark.createDataFrame([(1, "z"), (7, "n")], "id INT, g STRING") \
+        .createOrReplaceTempView("dm_src")
+    cat.sql("MERGE INTO dm t USING (SELECT * FROM dm_src) s "
+            "ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET g = concat(t.g, s.g) "
+            "WHEN NOT MATCHED THEN INSERT (id, g) VALUES (s.id, upper(s.g))")
+    assert _rows(cat.sql("SELECT id, g FROM dm")) == [
+        (1, "az"), (2, "bdm.g"), (3, "cdm.g"), (7, "N")]
+
+
 def test_fully_backticked_join_spelling_prunes(spark, join_cat):
     """`a`.col qualifiers are identifiers, not literals: the strip
     rewrites them too, so the consistent backticked spelling prunes."""
-    from qbeast_spark_spark.sources.catalog import _strip_alias_prefixes
-
-    assert _strip_alias_prefixes("`a`.l_orderkey < 200", ["a"]) \
-        == "l_orderkey < 200"
-    # string literals containing the same shape stay untouched
-    assert _strip_alias_prefixes("x = '`a`.y'", ["a"]) == "x = '`a`.y'"
     cat = join_cat
+    # string literals containing the same shape stay untouched
+    _assert_scans(spark, cat,
+                  "SELECT `a`.l_orderkey FROM qli `a` JOIN plain_orders o "
+                  "ON `a`.l_orderkey = o.o_orderkey "
+                  "WHERE `a`.l_orderkey < 200 AND o.o_orderstatus != '`a`.y'",
+                  "l_orderkey < 200")
     full_n = len(cat.sql("SELECT * FROM qli").inputFiles())
     df = cat.sql(
         "SELECT `a`.l_orderkey FROM qli `a` JOIN plain_orders o "
@@ -1615,19 +1732,19 @@ def test_cte_lift_guards(spark, two_qb_cat):
     the lift; the MAIN query's WHERE is never attributed to a CTE body;
     recursive CTEs are skipped."""
     cat = two_qb_cat
-    entries = cat.tables()
-    cp = cat._cte_table_predicate
-    # second reference in the main query -> no lift
-    assert cp("WITH a AS (SELECT * FROM qli WHERE l_orderkey < 5) "
-              "SELECT * FROM a UNION ALL SELECT * FROM qli", entries) == {}
+    # a second reference in the main query reads every file
+    _assert_scans(spark, cat,
+                  "WITH a AS (SELECT * FROM qli WHERE l_orderkey < 5) "
+                  "SELECT * FROM a UNION ALL SELECT * FROM qli",
+                  "l_orderkey < 5", None)
     # the main query's WHERE belongs to the CTE OUTPUT, not the table
-    assert cp("WITH a AS (SELECT * FROM qli) "
-              "SELECT * FROM a WHERE l_orderkey < 5", entries) == {}
-    # happy shape: body WHERE attributed, alias flag carried
-    got = cp("WITH a AS (SELECT * FROM qli t WHERE t.l_orderkey < 5) "
-             "SELECT * FROM a", entries)
-    assert "qli" in got and got["qli"][1] is True \
-        and "l_orderkey < 5" in got["qli"][0]
+    _assert_scans(spark, cat,
+                  "WITH a AS (SELECT * FROM qli) "
+                  "SELECT * FROM a WHERE l_orderkey < 5", None)
+    # happy shape: body WHERE attributed through the alias
+    _assert_scans(spark, cat,
+                  "WITH a AS (SELECT * FROM qli t WHERE t.l_orderkey < 5) "
+                  "SELECT * FROM a", "l_orderkey < 5")
     # results stay exact when the main query adds its own WHERE
     li = load(spark, "lineitem")
     got_df = cat.sql(
@@ -1644,11 +1761,10 @@ def test_left_join_preserved_side_lifts(spark, join_cat):
     cat = join_cat
     li = load(spark, "lineitem")
     orders = load(spark, "orders")
-    got = cat._join_table_predicate(
-        "SELECT * FROM qli t LEFT JOIN plain_orders o "
-        "ON t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 200",
-        cat.tables())
-    assert "qli" in got and "l_orderkey < 200" in got["qli"][0]
+    _assert_scans(spark, cat,
+                  "SELECT * FROM qli t LEFT JOIN plain_orders o "
+                  "ON t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 200",
+                  "l_orderkey < 200")
     full = cat.sql(
         "SELECT t.l_orderkey FROM qli t LEFT JOIN plain_orders o "
         "ON t.l_orderkey = o.o_orderkey")
@@ -1670,34 +1786,31 @@ def test_left_join_chain_positions(spark, join_cat):
     null-extendable. qli lifts when it leads the chain or is
     inner-joined after a LEFT; never when it follows the LEFT itself."""
     cat = join_cat
-    jp = cat._join_table_predicate
-    entries = cat.tables()
+    lifts = "l_orderkey < 50"
     # qli leads, LEFT JOIN then INNER JOIN follow -> preserved, lifts
-    got = jp("SELECT * FROM qli t LEFT JOIN plain_orders o ON "
-             "t.l_orderkey = o.o_orderkey JOIN plain_orders p ON "
-             "t.l_orderkey = p.o_orderkey WHERE t.l_orderkey < 50",
-             entries)
-    assert "qli" in got
+    _assert_scans(spark, cat,
+                  "SELECT * FROM qli t LEFT JOIN plain_orders o ON "
+                  "t.l_orderkey = o.o_orderkey JOIN plain_orders p ON "
+                  "t.l_orderkey = p.o_orderkey WHERE t.l_orderkey < 50",
+                  lifts)
     # qli inner-joined AFTER a left join -> still preserved, lifts
-    got = jp("SELECT * FROM plain_orders o LEFT JOIN plain_orders p ON "
-             "o.o_orderkey = p.o_orderkey JOIN qli t ON "
-             "t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 50",
-             entries)
-    assert "qli" in got
+    _assert_scans(spark, cat,
+                  "SELECT * FROM plain_orders o LEFT JOIN plain_orders p "
+                  "ON o.o_orderkey = p.o_orderkey JOIN qli t ON "
+                  "t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 50",
+                  lifts)
     # qli DIRECTLY after LEFT JOIN -> null-extendable, no lift
-    assert jp("SELECT * FROM plain_orders o LEFT JOIN qli t ON "
-              "o.o_orderkey = t.l_orderkey WHERE t.l_orderkey < 50",
-              entries) == {}
-    assert jp("SELECT * FROM plain_orders o LEFT OUTER JOIN qli t ON "
-              "o.o_orderkey = t.l_orderkey WHERE t.l_orderkey < 50",
-              entries) == {}
-    # RIGHT/FULL still rejected outright (they extend the LEFT side)
-    assert jp("SELECT * FROM qli t RIGHT JOIN plain_orders o ON "
-              "t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 50",
-              entries) == {}
-    assert jp("SELECT * FROM qli t FULL OUTER JOIN plain_orders o ON "
-              "t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 50",
-              entries) == {}
+    for kw in ("LEFT JOIN", "LEFT OUTER JOIN"):
+        _assert_scans(spark, cat,
+                      f"SELECT * FROM plain_orders o {kw} qli t ON "
+                      "o.o_orderkey = t.l_orderkey "
+                      "WHERE t.l_orderkey < 50", None)
+    # RIGHT/FULL null-extend the LEFT side -> no lift
+    for kw in ("RIGHT JOIN", "FULL OUTER JOIN"):
+        _assert_scans(spark, cat,
+                      f"SELECT * FROM qli t {kw} plain_orders o ON "
+                      "t.l_orderkey = o.o_orderkey "
+                      "WHERE t.l_orderkey < 50", None)
 
 
 def test_left_join_nullable_side_results_exact(spark, join_cat):
@@ -1725,11 +1838,10 @@ def test_right_join_preserved_side_lifts(spark, join_cat):
     cat = join_cat
     li = load(spark, "lineitem")
     orders = load(spark, "orders")
-    got = cat._join_table_predicate(
-        "SELECT * FROM plain_orders o RIGHT JOIN qli t "
-        "ON t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 200",
-        cat.tables())
-    assert "qli" in got and "l_orderkey < 200" in got["qli"][0]
+    _assert_scans(spark, cat,
+                  "SELECT * FROM plain_orders o RIGHT JOIN qli t "
+                  "ON t.l_orderkey = o.o_orderkey WHERE t.l_orderkey < 200",
+                  "l_orderkey < 200")
     full = cat.sql(
         "SELECT t.l_orderkey FROM plain_orders o RIGHT JOIN qli t "
         "ON t.l_orderkey = o.o_orderkey")
@@ -1751,40 +1863,43 @@ def test_right_join_chain_positions(spark, join_cat):
     JOIN comes AFTER it (a RIGHT JOIN null-extends the whole
     accumulated left side) and it does not directly follow a LEFT."""
     cat = join_cat
-    jp = cat._join_table_predicate
-    entries = cat.tables()
     W = "WHERE t.l_orderkey < 50"
+    lifts = "l_orderkey < 50"
     # qli after RIGHT [OUTER] JOIN -> preserved, lifts
     for kw in ("RIGHT JOIN", "RIGHT OUTER JOIN"):
-        got = jp(f"SELECT * FROM plain_orders o {kw} qli t ON "
-                 f"t.l_orderkey = o.o_orderkey {W}", entries)
-        assert "qli" in got, kw
+        _assert_scans(spark, cat,
+                      f"SELECT * FROM plain_orders o {kw} qli t ON "
+                      f"t.l_orderkey = o.o_orderkey {W}", lifts)
     # a further INNER join after -> still preserved, lifts
-    got = jp("SELECT * FROM plain_orders o RIGHT JOIN qli t ON "
-             "t.l_orderkey = o.o_orderkey JOIN plain_orders p ON "
-             f"t.l_orderkey = p.o_orderkey {W}", entries)
-    assert "qli" in got
+    _assert_scans(spark, cat,
+                  "SELECT * FROM plain_orders o RIGHT JOIN qli t ON "
+                  "t.l_orderkey = o.o_orderkey JOIN plain_orders p ON "
+                  f"t.l_orderkey = p.o_orderkey {W}", lifts)
     # qli BEFORE a top-level RIGHT JOIN -> whole left side
     # null-extended, no lift
-    assert jp("SELECT * FROM qli t RIGHT JOIN plain_orders o ON "
-              f"t.l_orderkey = o.o_orderkey {W}", entries) == {}
-    assert jp("SELECT * FROM plain_orders o RIGHT JOIN qli t ON "
-              "t.l_orderkey = o.o_orderkey RIGHT JOIN plain_orders p "
-              f"ON t.l_orderkey = p.o_orderkey {W}", entries) == {}
-    # qli directly after LEFT JOIN stays rejected even in a RIGHT-free
+    _assert_scans(spark, cat,
+                  "SELECT * FROM qli t RIGHT JOIN plain_orders o ON "
+                  f"t.l_orderkey = o.o_orderkey {W}", None)
+    _assert_scans(spark, cat,
+                  "SELECT * FROM plain_orders o RIGHT JOIN qli t ON "
+                  "t.l_orderkey = o.o_orderkey RIGHT JOIN plain_orders p "
+                  f"ON t.l_orderkey = p.o_orderkey {W}", None)
+    # qli directly after LEFT JOIN stays guarded even in a RIGHT-free
     # chain (regression: the LEFT rule is unchanged)
-    assert jp("SELECT * FROM plain_orders o LEFT JOIN qli t ON "
-              f"o.o_orderkey = t.l_orderkey {W}", entries) == {}
-    # a RIGHT JOIN inside a derived-table subquery AFTER qli is
-    # depth>0 — it cannot null-extend this level, qli still lifts
-    got = jp("SELECT * FROM qli t JOIN (SELECT a.o_orderkey FROM "
-             "plain_orders a RIGHT JOIN plain_orders b ON "
-             "a.o_orderkey = b.o_orderkey) p ON "
-             f"t.l_orderkey = p.o_orderkey {W}", entries)
-    assert "qli" in got
-    # FULL stays rejected wholesale
-    assert jp("SELECT * FROM plain_orders o FULL OUTER JOIN qli t ON "
-              f"o.o_orderkey = t.l_orderkey {W}", entries) == {}
+    _assert_scans(spark, cat,
+                  "SELECT * FROM plain_orders o LEFT JOIN qli t ON "
+                  f"o.o_orderkey = t.l_orderkey {W}", None)
+    # a RIGHT JOIN inside a derived-table subquery AFTER qli cannot
+    # null-extend this level, qli still lifts
+    _assert_scans(spark, cat,
+                  "SELECT * FROM qli t JOIN (SELECT a.o_orderkey FROM "
+                  "plain_orders a RIGHT JOIN plain_orders b ON "
+                  "a.o_orderkey = b.o_orderkey) p ON "
+                  f"t.l_orderkey = p.o_orderkey {W}", lifts)
+    # FULL stays guarded wholesale
+    _assert_scans(spark, cat,
+                  "SELECT * FROM plain_orders o FULL OUTER JOIN qli t ON "
+                  f"o.o_orderkey = t.l_orderkey {W}", None)
 
 
 def test_right_join_nullable_side_results_exact(spark, join_cat):
