@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import Iterator, List, Tuple
 
-__all__ = ["CubeId", "max_depth_for_dims"]
+__all__ = ["CubeId", "cube_str", "max_depth_for_dims", "parse_cube"]
 
 # Coordinates live in [0, 1); clamp 1.0 (the max of a linear transform) just
 # inside so the containing cube chain is well defined at every depth.
@@ -29,6 +29,17 @@ _ONE_MINUS_EPS = 1.0 - 2.0**-52
 def max_depth_for_dims(dims: int) -> int:
     """Deepest level whose packed path still fits in a signed int64."""
     return 63 // dims
+
+
+def cube_str(depth: int, path: int) -> str:
+    """The log's cube id string: ``"<depth>:<path in hex>"``."""
+    return f"{depth}:{path:x}"
+
+
+def parse_cube(s: str) -> Tuple[int, int]:
+    """Inverse of ``cube_str``: ``(depth, path)``."""
+    d, _, p = s.partition(":")
+    return int(d), int(p or "0", 16)
 
 
 class CubeId:
@@ -68,13 +79,12 @@ class CubeId:
 
     @staticmethod
     def from_string(dims: int, s: str) -> "CubeId":
-        depth_s, _, path_s = s.partition(":")
-        return CubeId(dims, int(depth_s), int(path_s or "0", 16))
+        return CubeId(dims, *parse_cube(s))
 
     # -- codec --------------------------------------------------------------
 
     def __str__(self) -> str:
-        return f"{self.depth}:{self.path:x}"
+        return cube_str(self.depth, self.path)
 
     def __repr__(self) -> str:
         return f"CubeId(dims={self.dims}, depth={self.depth}, path={self.path:#x})"

@@ -37,8 +37,9 @@ from typing import Any, Dict, List, Optional
 
 import numpy as np
 
+from ..core.cube import parse_cube
 from ..core.weight import INT_MIN, RANGE
-from ..sources.metadata import FileKernel, _parse_cube
+from ..sources.metadata import FileKernel
 
 __all__ = ["cube_tree", "sampling_info", "export_json", "export_html"]
 
@@ -127,7 +128,7 @@ def cube_tree(snapshot, revision_id: Optional[int] = None,
         for t in agg.itertuples():       # iterrows costs 10-50x more
             files = sorted(files_of[t.Index])
             c = {
-                "depth": _parse_cube(t.Index)[0],
+                "depth": parse_cube(t.Index)[0],
                 "parent": None,
                 "children": [],
                 "max_weight": float(t.max_weight),
@@ -145,7 +146,7 @@ def cube_tree(snapshot, revision_id: Optional[int] = None,
     # parent/child links, arithmetic over (depth, path-int): the parent
     # of (d, p) drops the last dims bits of the path
     for cid, c in cubes.items():
-        d, p = _parse_cube(cid)
+        d, p = parse_cube(cid)
         if d == 0:
             continue
         parent = f"{d - 1}:{p & ((1 << (dims * (d - 1))) - 1):x}"
@@ -154,7 +155,7 @@ def cube_tree(snapshot, revision_id: Optional[int] = None,
         if pc is not None:
             pc["children"].append(cid)
     for c in cubes.values():
-        c["children"].sort(key=_parse_cube)
+        c["children"].sort(key=parse_cube)
 
     out: Dict[str, Any] = {
         "revision_id": revision_id,
@@ -162,7 +163,7 @@ def cube_tree(snapshot, revision_id: Optional[int] = None,
         "columns": list(rev.column_names),
         "cube_count": len(cubes),
         "cubes": dict(sorted(cubes.items(),
-                             key=lambda kv: _parse_cube(kv[0]))),
+                             key=lambda kv: parse_cube(kv[0]))),
     }
     if fraction is not None:
         out["sampling_info"] = sampling_info(cubes, file_meta, fraction)
@@ -239,7 +240,7 @@ def _layout(tree: Dict[str, Any]) -> Dict[str, tuple]:
 
     roots = [cid for cid, c in cubes.items()
              if c["parent"] is None or c["parent"] not in cubes]
-    for r in sorted(roots, key=_parse_cube):
+    for r in sorted(roots, key=parse_cube):
         place(r)
     return pos
 
@@ -262,7 +263,7 @@ def export_html(snapshot, out_path: str,
         # keep the shallowest cubes (the informative structure); the
         # JSON export stays full-fidelity
         keep = dict(sorted(cubes.items(),
-                           key=lambda kv: _parse_cube(kv[0])
+                           key=lambda kv: parse_cube(kv[0])
                            )[:_MAX_SVG_CUBES])
         truncated = len(cubes) - len(keep)
         tree = dict(tree, cubes=keep)

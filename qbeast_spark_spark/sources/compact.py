@@ -34,8 +34,8 @@ import json
 import os
 from typing import Dict, List, Optional, Tuple
 
+from ..core.cube import parse_cube
 from .log import Block, CommitLog, IndexFile
-from .writer import _parse_cube
 
 __all__ = ["compact_table"]
 
@@ -49,7 +49,7 @@ def _cube_sort_key(f: IndexFile) -> Tuple[int, int]:
     as tightly as its inputs did."""
     if not f.blocks:
         return (0, 0)
-    depth, path = _parse_cube(f.blocks[0].cube)
+    depth, path = parse_cube(f.blocks[0].cube)
     shift = 60 - depth * 4
     return ((path << shift) if shift > 0 else path, depth)
 

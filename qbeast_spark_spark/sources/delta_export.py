@@ -36,6 +36,8 @@ import os
 import time
 from typing import Dict, List, Optional
 
+from ..core.cube import parse_cube
+
 __all__ = ["export_delta_log", "DELTA_LOG_DIR"]
 
 DELTA_LOG_DIR = "_delta_log"
@@ -73,10 +75,8 @@ def _qbeast_config_and_tags(snapshot, table_id: str):
         dims = max(indexed[f.revision_id].dims, 1)
         blocks = []
         for b in f.blocks:
-            depth_s, _, path_s = b.cube.partition(":")
             blocks.append({
-                "cubeId": encode_cube_string(dims, int(depth_s),
-                                             int(path_s or "0", 16)),
+                "cubeId": encode_cube_string(dims, *parse_cube(b.cube)),
                 "minWeight": int(b.min_weight),
                 "maxWeight": int(b.max_weight),
                 "elementCount": int(b.count),

@@ -33,6 +33,7 @@ import os
 import urllib.parse
 from typing import Any, Dict, List, Optional, Sequence, Tuple
 
+from ..core.cube import cube_str, parse_cube
 from ..core.transform import LinearTransformation
 from ..core.weight import INT_MAX
 from ..index.analyzer import with_index_columns
@@ -40,9 +41,7 @@ from .log import CommitLog
 from .metadata import FileKernel
 from .writer import (
     _complete_file_map,
-    _cube_str,
     _materialize,
-    _parse_cube,
     _stored_rows,
 )
 
@@ -225,7 +224,7 @@ def _indexed_adds(qt, snap, rev, replacement, selected,
     bloom_cols = sorted({c for f in selected for c in (f.blooms or {})})
     prepared = with_index_columns(replacement, rev)
     weights = {
-        _parse_cube(c): w
+        parse_cube(c): w
         for c, w in snap.cube_weights.get(rev.revision_id, {}).items()
     } or {(0, 0): INT_MAX}
     # rollup sizing from the matched files' stored block counts (an upper
@@ -233,7 +232,7 @@ def _indexed_adds(qt, snap, rev, replacement, selected,
     counts: Dict[Tuple[int, int], float] = {}
     for f in selected:
         for b in f.blocks:
-            key = (_parse_cube(b.cube)
+            key = (parse_cube(b.cube)
                    if f.revision_id != 0 else (0, 0))
             counts[key] = counts.get(key, 0.0) + b.count * scale
     for key in weights:
@@ -244,7 +243,7 @@ def _indexed_adds(qt, snap, rev, replacement, selected,
     num_files = max(1, len(set(rollup.values())))
     add = _materialize(prepared, rev, weights, file_map, num_files, qt.path,
                        bloom_cols=tuple(bloom_cols), rows=rows)
-    payload = {_cube_str(d, p): int(w) for (d, p), w in weights.items()}
+    payload = {cube_str(d, p): int(w) for (d, p), w in weights.items()}
     return add, payload
 
 

@@ -43,12 +43,7 @@ from typing import Dict, Iterator, List, Optional
 
 import numpy as np
 
-# local twin of sources/reader._parse_cube (importing reader here would
-# cycle: reader -> log -> metadata)
-def _parse_cube(s: str):
-    d, _, p = s.partition(":")
-    return int(d), int(p or "0", 16)
-
+from ..core.cube import parse_cube
 
 _STATS_MIN = "__stats_min"
 _STATS_MAX = "__stats_max"
@@ -117,7 +112,7 @@ class FileKernel:
             bf, bd, bp = [], [], []
             for i, f in enumerate(files):
                 for b in f.blocks:
-                    d, p = _parse_cube(b.cube)
+                    d, p = parse_cube(b.cube)
                     bf.append(i)
                     bd.append(d)
                     bp.append(p)
@@ -528,7 +523,7 @@ def _files_arrow_table(files, align_schema=None):
                               if f.blooms else None)
         blks = []
         for b in f.blocks:
-            d, p = _parse_cube(b.cube)
+            d, p = parse_cube(b.cube)
             blks.append({"cube": b.cube, "depth": d, "path_int": p,
                          "min_weight": int(b.min_weight),
                          "max_weight": int(b.max_weight),

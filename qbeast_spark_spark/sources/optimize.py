@@ -17,6 +17,7 @@ import os
 import time
 from typing import Dict, List, Optional, Sequence, Tuple
 
+from ..core.cube import cube_str, parse_cube
 from ..core.revision import Revision, STAGING_REVISION_ID
 from ..core.weight import INT_MAX, INT_MIN
 from ..index.analyzer import (
@@ -30,9 +31,7 @@ from .writer import (
     _build_transformations,
     _complete_file_map,
     _cube_domains,
-    _cube_str,
     _materialize,
-    _parse_cube,
     _stored_rows,
 )
 
@@ -124,7 +123,7 @@ def optimize_table(spark, path: str, fraction: float = 1.0,
     else:
         prepared = with_index_columns(df, rev)
         weights = {
-            _parse_cube(c): w
+            parse_cube(c): w
             for c, w in snap.cube_weights.get(rev.revision_id, {}).items()
         }
         if not weights:
@@ -134,7 +133,7 @@ def optimize_table(spark, path: str, fraction: float = 1.0,
         counts: Dict[Tuple[int, int], float] = {}
         for f in selected:
             for b in f.blocks:
-                key = (_parse_cube(b.cube)
+                key = (parse_cube(b.cube)
                        if f.revision_id != STAGING_REVISION_ID else (0, 0))
                 counts[key] = counts.get(key, 0.0) + b.count
         for key in weights:
@@ -159,7 +158,7 @@ def optimize_table(spark, path: str, fraction: float = 1.0,
         read_files=[f.path for f in selected],
         revisions={rev.revision_id: rev},
         cube_weights={rev.revision_id: {
-            _cube_str(d, p): int(w) for (d, p), w in weights.items()}},
+            cube_str(d, p): int(w) for (d, p), w in weights.items()}},
         schema_json=snap.schema_json or df.schema.json(),
         data_change=False,
         operation="OPTIMIZE",
@@ -229,7 +228,7 @@ def convert_to_qbeast(spark, path: str,
         add.append(IndexFile(
             os.path.basename(p), os.path.getsize(p), rows,
             STAGING_REVISION_ID,
-            [Block(_cube_str(0, 0), INT_MIN, INT_MAX, rows)],
+            [Block(cube_str(0, 0), INT_MIN, INT_MAX, rows)],
             _footer_column_stats(md)))
 
     staging = Revision(STAGING_REVISION_ID, int(time.time() * 1000),
@@ -275,7 +274,7 @@ def _write_staging_files(df, path: str) -> List[IndexFile]:
             if cs:
                 f.column_stats = cs
         # staging blocks cover the full weight range (StagingUtils semantics)
-        f.blocks = [Block(_cube_str(0, 0), INT_MIN, INT_MAX,
+        f.blocks = [Block(cube_str(0, 0), INT_MIN, INT_MAX,
                           f.rows + r["element_count"])]
         f.rows += r["element_count"]
     return list(by_file.values())

@@ -47,7 +47,8 @@ Semantics and scale notes:
   Delta-source semantics.
 - **Writes land in the staging lane** (revision 0, StagingUtils
   semantics): executors stream Arrow batches straight to parquet with
-  per-file column stats; the driver commits them atomically. CHECK
+  per-file column stats, in the indexed writer's row groups
+  (sources/sink.py); the driver commits them atomically. CHECK
   constraints are validated per batch (via DuckDB over the Arrow data —
   the write task has no SparkSession). Indexing is deferred to
   ``optimize()`` / ``auto_maintain`` — the micro-batch ingest shape.
@@ -89,6 +90,7 @@ from .predicates import to_dnf_filters
 from .qbeast_format import read_qbeast_delta_snapshot
 from .reader import (_timestamp_to_ms, prune_files, sample_files,
                      sample_hash_columns)
+from .sink import ParquetSink
 
 __all__ = ["QbeastDataSource", "register"]
 
@@ -496,18 +498,13 @@ class _WriteMessage(_CommitMsg):
 
 def _write_task(path: str, arrow_batches, constraints: Dict[str, str]):
     """Executor-side: stream Arrow batches into one parquet file under the
-    table root, tracking min/max column stats; validate CHECK constraints
-    per batch with DuckDB (no SparkSession in a write task)."""
+    table root through a ``ParquetSink`` (row groups and min/max column
+    stats); validate CHECK constraints per batch with DuckDB (no
+    SparkSession in a write task)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    import pyarrow.compute as pc
-
-    writer = None
+    sink = None
     name = f"{uuid.uuid4().hex}.parquet"
-    target = os.path.join(path, name)
-    rows = 0
-    stats: Dict[str, list] = {}
     for batch in arrow_batches:
         tbl = pa.Table.from_batches([batch])
         if constraints:
@@ -524,31 +521,13 @@ def _write_task(path: str, arrow_batches, constraints: Dict[str, str]):
                         f"CHECK constraint {cname!r} ({expr}) violated by "
                         f"{bad} row(s) in this batch")
             con.close()
-        if writer is None:
-            writer = pq.ParquetWriter(target, tbl.schema,
-                                      compression="snappy")
-        writer.write_table(tbl)
-        rows += tbl.num_rows
-        for fld in tbl.schema:
-            t = fld.type
-            if not (pa.types.is_integer(t) or pa.types.is_floating(t)
-                    or pa.types.is_string(t)):
-                continue
-            mm = pc.min_max(tbl.column(fld.name))
-            mn, mx = mm["min"].as_py(), mm["max"].as_py()
-            if mn is None:
-                continue
-            cur = stats.get(fld.name)
-            if cur is None:
-                stats[fld.name] = [mn, mx]
-            else:
-                cur[0] = min(cur[0], mn)
-                cur[1] = max(cur[1], mx)
-    if writer is None:
+        if sink is None:
+            sink = ParquetSink(os.path.join(path, name), tbl.schema)
+        sink.append(tbl)
+    if sink is None:
         return None             # empty task: no file
-    writer.close()
-    return _WriteMessage(name, os.path.getsize(target), rows,
-                         stats or None)
+    rows, size, stats = sink.close()
+    return _WriteMessage(name, size, rows, stats or None)
 
 
 def _commit_staging(path: str, messages, schema_json: str,

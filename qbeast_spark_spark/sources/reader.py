@@ -21,6 +21,7 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
+from ..core.cube import parse_cube
 from ..core.revision import Revision, STAGING_REVISION_ID
 from ..core.transform import HashTransformation, literal_to_number
 from ..core.weight import fraction_to_weight
@@ -39,11 +40,6 @@ __all__ = ["QbeastTable", "FilterTuple", "read_qbeast"]
 FilterTuple = Tuple[str, str, Any]
 
 _OPS = {">", ">=", "<", "<=", "=", "==", "in"}
-
-
-def _parse_cube(s: str) -> Tuple[int, int]:
-    d, _, p = s.partition(":")
-    return int(d), int(p or "0", 16)
 
 
 def _stats_exclude(f, filters) -> bool:
@@ -1097,7 +1093,7 @@ class QbeastTable:
         blocks = snap.all_blocks()
         if not blocks:
             return {"files": 0, "blocks": 0, "rows": 0}
-        depths = [_parse_cube(b.cube)[0] for _, _, b in blocks]
+        depths = [parse_cube(b.cube)[0] for _, _, b in blocks]
         counts = [b.count for _, _, b in blocks]
         cubes = {b.cube for _, _, b in blocks}
         per_level: Dict[int, int] = {}
@@ -1107,7 +1103,7 @@ class QbeastTable:
         # per-level counts, leaf detection): all O(#cubes) driver work.
         rev = snap.latest_revision()
         dims = rev.dims if rev else 1
-        cube_keys = {_parse_cube(c) for c in cubes}
+        cube_keys = {parse_cube(c) for c in cubes}
         cubes_per_level: Dict[int, int] = {}
         for d, _p in cube_keys:
             cubes_per_level[d] = cubes_per_level.get(d, 0) + 1

@@ -10,7 +10,14 @@ job 2  cube-domain sketch                  — mapInArrow + tiny shuffle
 driver cube weights + rollup               — O(#cubes) Python
 job 3  cube assignment -> repartition by   — mapInArrow (NumPy), shuffle on
        rollup file -> per-task Arrow        the rollup file id only, then
-       parquet writing with Block stats     streaming ParquetWriter per file
+       parquet writing with Block stats     row groups of ROW_GROUP_ROWS per
+                                            file (sources/sink.py)
+
+Row groups: the writer owns the parquet layout. Every file goes through
+one ``ParquetSink``, which writes groups of exactly ``ROW_GROUP_ROWS``
+rows and puts the remainder in the file's last group, whatever Arrow
+batch size the session hands the write stage; the session conf is never
+touched.
 
 The only full-data shuffle is the rollup repartition — identical to the
 reference (RollupDataWriter.scala:67). Driver state is O(#cubes), never
@@ -42,13 +49,14 @@ skips the sketch but writes through job 3.
 from __future__ import annotations
 
 import os
+import threading
 import time
 import uuid
 from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
-from ..core.cube import max_depth_for_dims
+from ..core.cube import cube_str, parse_cube
 from ..core.revision import (
     DEFAULT_CUBE_SIZE,
     Revision,
@@ -73,6 +81,7 @@ from ..index.analyzer import (
 )
 from ..index.vectorized import LevelMap, assign_cubes
 from .log import Block, CommitLog, IndexFile
+from .sink import ParquetSink
 
 __all__ = ["write_qbeast"]
 
@@ -96,15 +105,6 @@ _STRING_BYTES = 64
 _META_SCHEMA = ("file string, col_stats string, blooms string, "
                 "cube_depth int, cube_path long, min_weight long, "
                 "max_weight long, element_count long, file_size long")
-
-
-def _cube_str(depth: int, path: int) -> str:
-    return f"{depth}:{path:x}"
-
-
-def _parse_cube(s: str) -> Tuple[int, int]:
-    d, _, p = s.partition(":")
-    return int(d), int(p or "0", 16)
 
 
 def _build_transformations(df, revision_cols, column_types, column_stats):
@@ -221,12 +221,10 @@ def _make_assign_fn(level_map: LevelMap, dims: int, norm_cols: List[str],
 def _make_write_fn(table_path: str, helper_cols: List[str],
                    bloom_cols: Tuple[str, ...] = (),
                    bloom_bits: int = 16384):
-    """Per-task streaming parquet writer + Block stats accumulator
-    (IndexFileWriter.scala:44-96 re-expressed with pyarrow)."""
+    """Per-task parquet writing through one ``ParquetSink`` per rollup
+    file + Block stats accumulator (IndexFileWriter.scala:44-96
+    re-expressed with pyarrow)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    import pyarrow.compute as pc
 
     # resolve the bloom kernels HERE (driver scope) so cloudpickle ships
     # them by value with the closure — an import inside write() would
@@ -235,13 +233,10 @@ def _make_write_fn(table_path: str, helper_cols: List[str],
     from ..functions.bloom import bloom_add_many, bloom_encode, bloom_new
 
     def write(batches):
-        writers: Dict[int, Tuple[Any, str]] = {}
+        sinks: Dict[int, ParquetSink] = {}
+        last: Optional[ParquetSink] = None
         # (file_id, depth, path) -> [min_w, max_w, count]
         stats: Dict[Tuple[int, int, int], List[int]] = {}
-        # file_id -> {col: [min, max]} for int/float/string columns —
-        # Delta data-skipping stats, collected while the batches stream
-        # through (no extra scan)
-        col_stats: Dict[int, Dict[str, list]] = {}
         # file_id -> {col: bitmap} opt-in string point-lookup blooms
         blooms: Dict[int, Dict[str, Any]] = {}
 
@@ -257,24 +252,6 @@ def _make_write_fn(table_path: str, helper_cols: List[str],
                     bm = dst[c] = bloom_new(bloom_bits)
                 bloom_add_many(bm, sub.column(c).to_pylist())
 
-        def track_col_stats(fid: int, sub) -> None:
-            dst = col_stats.setdefault(fid, {})
-            for field_ in sub.schema:
-                t = field_.type
-                if not (pa.types.is_integer(t) or pa.types.is_floating(t)
-                        or pa.types.is_string(t)):
-                    continue
-                mm = pc.min_max(sub.column(field_.name))
-                mn, mx = mm["min"].as_py(), mm["max"].as_py()
-                if mn is None:          # all-null chunk: nothing to learn
-                    continue
-                cur = dst.get(field_.name)
-                if cur is None:
-                    dst[field_.name] = [mn, mx]
-                else:
-                    cur[0] = min(cur[0], mn)
-                    cur[1] = max(cur[1], mx)
-
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             fids = tbl.column(FILE_COL).to_numpy(zero_copy_only=False)
@@ -283,18 +260,19 @@ def _make_write_fn(table_path: str, helper_cols: List[str],
             ws = tbl.column(WEIGHT_COL).to_numpy(zero_copy_only=False).astype(np.int64)
             data = tbl.drop_columns(helper_cols)
 
-            for fid in np.unique(fids):
-                mask = fids == fid
-                idx = np.flatnonzero(mask)
+            for fid in map(int, np.unique(fids)):
+                idx = np.flatnonzero(fids == fid)
                 sub = data.take(idx)
-                if int(fid) not in writers:
-                    name = f"{uuid.uuid4().hex}.parquet"
-                    w = pq.ParquetWriter(os.path.join(table_path, name),
-                                         sub.schema, compression="snappy")
-                    writers[int(fid)] = (w, name)
-                writers[int(fid)][0].write_table(sub)
-                track_col_stats(int(fid), sub)
-                track_blooms(int(fid), sub)
+                if fid not in sinks:
+                    if last is not None:
+                        # sorted input: the previous file has no more rows
+                        last.flush()
+                    sinks[fid] = ParquetSink(os.path.join(
+                        table_path, f"{uuid.uuid4().hex}.parquet"),
+                        sub.schema)
+                last = sinks[fid]
+                last.append(sub)
+                track_blooms(fid, sub)
                 # block stats per cube inside this file
                 d_sub, p_sub, w_sub = depths[idx], paths[idx], ws[idx]
                 okey = np.lexsort((p_sub, d_sub))
@@ -304,7 +282,7 @@ def _make_write_fn(table_path: str, helper_cols: List[str],
                 starts = np.concatenate(([0], boundary))
                 ends = np.concatenate((boundary, [len(d_s)]))
                 for s, e in zip(starts, ends):
-                    k = (int(fid), int(d_s[s]), int(p_s[s]))
+                    k = (fid, int(d_s[s]), int(p_s[s]))
                     mn = int(w_s[s:e].min())
                     mx = int(w_s[s:e].max())
                     cnt = int(e - s)
@@ -316,32 +294,28 @@ def _make_write_fn(table_path: str, helper_cols: List[str],
                     else:
                         stats[k] = [mn, mx, cnt]
 
-        sizes = {}
-        for fid, (w, name) in writers.items():
-            w.close()
-            sizes[fid] = os.path.getsize(os.path.join(table_path, name))
-
         import json as _json
 
+        closed = {fid: sink.close() for fid, sink in sinks.items()}
         rows = {"file": [], "col_stats": [], "blooms": [],
                 "cube_depth": [], "cube_path": [], "min_weight": [],
                 "max_weight": [], "element_count": [], "file_size": []}
         stats_json = {fid: _json.dumps(cs, sort_keys=True)
-                      for fid, cs in col_stats.items()}
+                      for fid, (_, _, cs) in closed.items()}
         blooms_json = {fid: _json.dumps({c: bloom_encode(bm)
                                          for c, bm in bms.items()},
                                         sort_keys=True)
                        for fid, bms in blooms.items()}
         for (fid, d, p), (mn, mx, cnt) in stats.items():
-            rows["file"].append(writers[fid][1])
-            rows["col_stats"].append(stats_json.get(fid, "{}"))
+            rows["file"].append(os.path.basename(sinks[fid].path))
+            rows["col_stats"].append(stats_json[fid])
             rows["blooms"].append(blooms_json.get(fid, "{}"))
             rows["cube_depth"].append(d)
             rows["cube_path"].append(p)
             rows["min_weight"].append(mn)
             rows["max_weight"].append(mx)
             rows["element_count"].append(cnt)
-            rows["file_size"].append(sizes[fid])
+            rows["file_size"].append(closed[fid][1])
         if rows["file"]:
             yield pa.RecordBatch.from_arrays(
                 [pa.array(rows["file"], type=pa.string()),
@@ -500,11 +474,33 @@ def _index_files(meta, revision: Revision) -> List[IndexFile]:
             bm = _json.loads(r["blooms"])
             if bm:
                 f.blooms = bm
-        f.blocks.append(Block(_cube_str(r["cube_depth"], r["cube_path"]),
+        f.blocks.append(Block(cube_str(r["cube_depth"], r["cube_path"]),
                               r["min_weight"], r["max_weight"],
                               r["element_count"]))
         f.rows += r["element_count"]
     return list(by_file.values())
+
+
+# Wall-clock of the last write's phases (transform stats job / domain
+# estimation job / assign+shuffle+write job / log commit), refreshed by
+# every write_qbeast call. Diagnostic only — bench.py surfaces it
+# as qb_write.* submetrics so a write-time regression is attributable to
+# a phase instead of showing up as one opaque number.
+LAST_WRITE_PHASES: Dict[str, float] = {}
+
+# Row count of the last write's INPUT batch, measured by the stats job
+# the write runs anyway — callers that want an "affected rows" figure
+# (the SQL surface's INSERT status) read it via last_write_rows()
+# instead of paying a third pass over the source query. Thread-local:
+# two threads writing through one session must not cross-report counts.
+# An idempotent-txn skip reports 0 (the batch wrote nothing).
+_WRITE_TL = threading.local()
+
+
+def last_write_rows() -> Optional[int]:
+    """Row count written by this THREAD's most recent write_qbeast call
+    (0 for an idempotent-txn skip; None if the thread has not written)."""
+    return getattr(_WRITE_TL, "rows", None)
 
 
 def write_qbeast(df, path: str,
@@ -554,15 +550,13 @@ def write_qbeast(df, path: str,
     (SparkColumnsToIndexSelector parity — the reference does the same when
     the option is absent); an existing table's indexed columns still win
     on append."""
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     if columns_to_index is None:
-        from .log import CommitLog as _CL
         from .reader import QbeastTable as _QT
 
         existing = None
-        if _CL(path).exists():
+        if CommitLog(path).exists():
             existing = _QT(df.sparkSession, path) \
                 .snapshot().latest_revision()
         if existing is not None:
@@ -580,90 +574,6 @@ def write_qbeast(df, path: str,
         # empty first batch must not accept the typo silently)
         raise ValueError(
             f"analyze_fraction must be in (0, 1], got {analyze_fraction}")
-
-    # Bigger Arrow batches cut the per-batch Python/JVM round trips of the
-    # two mapInArrow stages, and the write stage turns each batch it
-    # receives into at least one parquet row group (write_table per
-    # batch), so the batch size also bounds the row-group size. Measured
-    # on perfbench ingest_dml (4 alternating pairs, --seconds 10, 4 vCPU):
-    # without the override the files grow (write_amp 5.096 -> 5.163,
-    # scan_mb_per_op 1.230 -> 1.285 in every pair) and ops_per_s drops
-    # 0.579 -> 0.520 (3 of 4 pairs). Restored after the commit so we
-    # don't leak config into the caller's session.
-    # Depth-counted under a lock: with concurrent writes on one session
-    # (a supported shape — see last_write_rows), naive save/restore pairs
-    # interleave and leak the override permanently. The counter is keyed
-    # PER SparkSession (not process-global): with two sessions writing
-    # concurrently, a global depth would skip the override on the second
-    # session entirely and could restore session A's saved value into
-    # session B's conf. The entry is deleted at depth 0, so a recycled
-    # id() can never observe a stale record.
-    _spark = df.sparkSession
-    _key = id(_spark)
-    with _ARROW_LOCK:
-        depth, prev = _ARROW_STATE.get(_key, (0, None))
-        if depth == 0:
-            prev = _spark.conf.get(_ARROW_BATCH_KEY, None)
-            _spark.conf.set(_ARROW_BATCH_KEY, "65536")
-        _ARROW_STATE[_key] = (depth + 1, prev)
-    try:
-        return _write_qbeast_inner(df, path, columns_to_index, cube_size,
-                                   mode, column_stats, pre_commit_hooks,
-                                   merge_schema, txn_app_id, txn_version,
-                                   bloom_columns, bloom_bits, constraints,
-                                   analyze_fraction)
-    finally:
-        with _ARROW_LOCK:
-            depth, prev = _ARROW_STATE[_key]
-            if depth == 1:
-                del _ARROW_STATE[_key]
-                if prev is None:
-                    _spark.conf.unset(_ARROW_BATCH_KEY)
-                else:
-                    _spark.conf.set(_ARROW_BATCH_KEY, prev)
-            else:
-                _ARROW_STATE[_key] = (depth - 1, prev)
-
-
-# Wall-clock of the last write's phases (transform stats job / domain
-# estimation job / assign+shuffle+write job / log commit), refreshed by
-# every _write_qbeast_inner call. Diagnostic only — bench.py surfaces it
-# as qb_write.* submetrics so a write-time regression is attributable to
-# a phase instead of showing up as one opaque number.
-LAST_WRITE_PHASES: Dict[str, float] = {}
-
-# Row count of the last write's INPUT batch, measured by the stats job
-# the write runs anyway — callers that want an "affected rows" figure
-# (the SQL surface's INSERT status) read it via last_write_rows()
-# instead of paying a third pass over the source query. Thread-local:
-# two threads writing through one session must not cross-report counts.
-# An idempotent-txn skip reports 0 (the batch wrote nothing).
-import threading as _threading
-
-_WRITE_TL = _threading.local()
-
-_ARROW_BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
-_ARROW_LOCK = _threading.Lock()
-# id(SparkSession) -> (depth, saved previous value); see write_qbeast
-_ARROW_STATE: Dict[int, Tuple[int, Optional[str]]] = {}
-
-
-def last_write_rows() -> Optional[int]:
-    """Row count written by this THREAD's most recent write_qbeast call
-    (0 for an idempotent-txn skip; None if the thread has not written)."""
-    return getattr(_WRITE_TL, "rows", None)
-
-
-def _write_qbeast_inner(df, path: str, columns_to_index,
-                        cube_size: int, mode: str,
-                        column_stats, pre_commit_hooks,
-                        merge_schema: bool = False,
-                        txn_app_id=None, txn_version=None,
-                        bloom_columns=None, bloom_bits: int = 16384,
-                        constraints=None,
-                        analyze_fraction=None) -> int:
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
@@ -782,14 +692,14 @@ def _write_qbeast_inner(df, path: str, columns_to_index,
     LAST_WRITE_PHASES["domains"] = (0.0 if _driver_lane(revision, n)
                                     else time.perf_counter() - _t0)
     existing_domains = {
-        _parse_cube(c): d
+        parse_cube(c): d
         for c, d in snapshot.cube_domains.get(revision.revision_id, {}).items()
     }
     merged_domains = dict(existing_domains)
     for k, v in new_domains.items():
         merged_domains[k] = merged_domains.get(k, 0.0) + v
     existing_weights = {
-        _parse_cube(c): w
+        parse_cube(c): w
         for c, w in snapshot.cube_weights.get(revision.revision_id, {}).items()
     }
     weights = compute_cube_weights(merged_domains, revision.desired_cube_size,
@@ -823,9 +733,9 @@ def _write_qbeast_inner(df, path: str, columns_to_index,
         remove=remove,
         revisions={revision.revision_id: revision},
         cube_weights={revision.revision_id: {
-            _cube_str(d, p): int(w) for (d, p), w in weights.items()}},
+            cube_str(d, p): int(w) for (d, p), w in weights.items()}},
         cube_domains={revision.revision_id: {
-            _cube_str(d, p): float(v) for (d, p), v in new_domains.items()}},
+            cube_str(d, p): float(v) for (d, p), v in new_domains.items()}},
         schema_json=data_schema,
         properties={"qbeast.lastRevisionID": str(revision.revision_id),
                     **extra_props, **constraint_props},

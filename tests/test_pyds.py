@@ -175,6 +175,47 @@ def test_writer_column_stats_recorded(ds_spark, tmp_table):
     assert stats and all(s and "o_totalprice" in s for s in stats)
 
 
+def test_writer_row_groups_and_stats_ignore_batch_size(ds_spark, tmp_table):
+    """70k rows in one task under a caller's ``maxRecordsPerBatch`` of
+    1,000: the staging file still gets 65,536-row groups (the last one
+    holds the remainder), and its logged column stats are Spark's
+    min/max over the file."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from qbeast_spark_spark.sources.sink import ROW_GROUP_ROWS
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = ds_spark.conf.get(key, None)
+    ds_spark.conf.set(key, "1000")
+    try:
+        ds_spark.range(0, 70_000, 1, 1).select(
+            "id", (F.col("id") % 977 / 7.0).alias("x"),
+            F.format_string("s%05d", F.col("id") * 13 % 70_000).alias("s"),
+            F.when(F.col("id") > 0, F.col("id")).alias("nid")) \
+            .write.format("qbeast").mode("append").save(tmp_table)
+    finally:
+        if prev is None:
+            ds_spark.conf.unset(key)
+        else:
+            ds_spark.conf.set(key, prev)
+    files = qss.QbeastTable.for_path(ds_spark, tmp_table) \
+        .snapshot().files.values()
+    assert len(files) == 1
+    for f in files:
+        full = os.path.join(tmp_table, f.path)
+        md = pq.ParquetFile(full).metadata
+        groups = [md.row_group(i).num_rows
+                  for i in range(md.num_row_groups)]
+        assert groups == [ROW_GROUP_ROWS, 70_000 - ROW_GROUP_ROWS], groups
+        assert f.rows == 70_000
+        cols = ["id", "x", "s", "nid"]
+        got = ds_spark.read.parquet(full).agg(
+            *[F.min(c) for c in cols], *[F.max(c) for c in cols]).first()
+        assert f.column_stats == {
+            c: [got[i], got[i + len(cols)]] for i, c in enumerate(cols)}
+
+
 def test_writer_enforces_constraints(ds_spark, tmp_table):
     r = load(ds_spark, "region")
     qss.write(r, tmp_table, columns_to_index=["r_regionkey"], cube_size=100)

@@ -1,11 +1,12 @@
 """Driver lane vs distributed lane of the indexed writer (writer.py
 ``_materialize``): the same batch, weights and file map must produce the
 same rows, the same parquet schemas (timezone annotation included), the
-same Block stats per file, and the same sample / prune answers — on
-adversarial values, under ANSI on and off. Plus the guard's boundary:
-``min(cube size, DRIVER_MAX_WRITE_ROWS)`` rows take the driver lane and
-skip the sketch, one more row does not; wide columns and row counts the
-log cannot bound keep the rows off the driver."""
+same Block stats and row groups per file, and the same sample / prune
+answers — on adversarial values, under ANSI on and off. Plus the guard's
+boundary: ``min(cube size, DRIVER_MAX_WRITE_ROWS)`` rows take the driver
+lane and skip the sketch, one more row does not; wide columns and row
+counts the log cannot bound keep the rows off the driver. And the row
+groups are the writer's, not the caller's Arrow batch size."""
 
 import datetime as dt
 import decimal
@@ -70,22 +71,23 @@ def base_table(spark, tmp_path_factory):
 def _lane_write(spark, base, dst, batch, rows):
     """Copy ``base`` to ``dst``, write ``batch`` through ``_materialize``
     with the base's weights and file map, and commit the adds."""
+    from qbeast_spark_spark.core.cube import parse_cube
     from qbeast_spark_spark.index.analyzer import (
         compute_rollup_from_counts, with_index_columns)
     from qbeast_spark_spark.sources.log import CommitLog
     from qbeast_spark_spark.sources.writer import (
-        _complete_file_map, _materialize, _parse_cube)
+        _complete_file_map, _materialize)
 
     shutil.copytree(base, dst)
     log = CommitLog(dst)
     snap = log.snapshot()
     rev = snap.latest_revision()
-    weights = {_parse_cube(c): w for c, w in
+    weights = {parse_cube(c): w for c, w in
                snap.cube_weights[rev.revision_id].items()}
     counts = {}
     for f in snap.files.values():
         for b in f.blocks:
-            k = _parse_cube(b.cube)
+            k = parse_cube(b.cube)
             counts[k] = counts.get(k, 0.0) + b.count
     rollup = compute_rollup_from_counts(counts, rev.dims,
                                         rev.desired_cube_size)
@@ -121,6 +123,11 @@ def _file_sig(f):
                         for b in f.blocks))
 
 
+def _row_groups(path):
+    md = pq.ParquetFile(path).metadata
+    return [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+
+
 def _lane_view(spark, path, add):
     """Everything that must agree between lanes, keyed by file content
     (file names are random)."""
@@ -137,7 +144,8 @@ def _lane_view(spark, path, add):
         files.append((_file_sig(f), pq.read_schema(
             os.path.join(path, f.path)).to_string(),
             json.dumps(f.column_stats, sort_keys=True, default=str),
-            json.dumps(f.blooms, sort_keys=True)))
+            json.dumps(f.blooms, sort_keys=True),
+            _row_groups(os.path.join(path, f.path))))
     qt = qss.QbeastTable.for_path(spark, path)
     snap = qt.snapshot(refresh=True)
 
@@ -203,6 +211,53 @@ def test_driver_lane_matches_distributed_lane(spark, base_table, tmp_path,
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev_ansi)
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+def test_row_groups_ignore_the_callers_arrow_batch_size(spark, tmp_path):
+    """The writer sizes its row groups itself and leaves the session conf
+    alone: a 70k-row write (distributed lane) plus a 2k-row append
+    (driver lane) under a caller's ``maxRecordsPerBatch`` of 1,000 sees
+    1,000 mid-write and lays out the same row groups as under the unset
+    conf — 65,536 rows each, the remainder in a file's last group."""
+    from pyspark.sql import functions as F
+
+    from qbeast_spark_spark import write_qbeast
+    from qbeast_spark_spark.sources.log import CommitLog
+    from qbeast_spark_spark.sources.sink import ROW_GROUP_ROWS
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+
+    def layout(path, batch_size):
+        seen = []
+        if batch_size is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, str(batch_size))
+        for n in (70_000, 2_000):
+            df = spark.range(0, n, 1, 2).select(
+                "id", (F.col("id") * 7919 % 1000).alias("x"),
+                F.format_string("s%d", F.col("id") % 97).alias("s"))
+            write_qbeast(df, path, columns_to_index=["x"],
+                         pre_commit_hooks=[
+                             lambda _: seen.append(spark.conf.get(key, None))])
+        files = CommitLog(path).snapshot().files
+        return seen, sorted(_row_groups(os.path.join(path, f))
+                            for f in files)
+
+    try:
+        seen, small = layout(str(tmp_path / "small"), 1000)
+        unset_seen, unset = layout(str(tmp_path / "unset"), None)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert seen == ["1000", "1000"], seen
+    assert unset_seen == [None, None], unset_seen
+    # one cube at the default cube size: one file per write
+    assert small == unset == [[2_000], [ROW_GROUP_ROWS,
+                                        70_000 - ROW_GROUP_ROWS]], small
 
 
 def test_guard_boundary_and_write_diagnostics(spark, tmp_path, monkeypatch):

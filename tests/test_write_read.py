@@ -401,54 +401,3 @@ def test_provided_column_stats_bound_transformations(spark, lineitem):
         lineitem, parse_columns_to_index(["l_orderkey"]), ["bigint"],
         {"l_orderkey": {"min": 0}})
     assert (tf2[0].min_value, tf2[0].max_value) == (0.0, data_max)
-
-
-def test_arrow_override_is_per_session(spark, tmp_path):
-    """ADVICE r7: the Arrow batch-size save/restore depth counter was
-    process-global — a write on session B while session A's write is in
-    flight skipped B's override and the restore could write A's saved
-    value into B's conf. Keyed per SparkSession now: both sessions get
-    the override, each restores its OWN previous value."""
-    import qbeast_spark_spark.sources.writer as W
-
-    key = W._ARROW_BATCH_KEY
-    sess_b = spark.newSession()
-    prev_a = spark.conf.get(key, None)
-    spark.conf.set(key, "123")
-    sess_b.conf.set(key, "456")
-    df_a = spark.range(20).toDF("id")
-    df_b = sess_b.range(20).toDF("id")
-    real_inner = W._write_qbeast_inner
-    checked = {"b_active": False, "b_restored": False}
-
-    def wrapped_inner(df, *a, **k):
-        if df is df_b:
-            # B's override must be active even while A's write is in
-            # flight (the old global counter skipped it at depth 2)
-            checked["b_active"] = (sess_b.conf.get(key) == "65536"
-                                   and spark.conf.get(key) == "65536")
-            return real_inner(df, *a, **k)
-        W.write_qbeast(df_b, str(tmp_path / "b"),
-                       columns_to_index=["id"], cube_size=10)
-        # B restored to ITS sentinel; A still overridden
-        checked["b_restored"] = (sess_b.conf.get(key) == "456"
-                                 and spark.conf.get(key) == "65536")
-        return real_inner(df, *a, **k)
-
-    W._write_qbeast_inner = wrapped_inner
-    after_a = None
-    try:
-        W.write_qbeast(df_a, str(tmp_path / "a"),
-                       columns_to_index=["id"], cube_size=10)
-        after_a = spark.conf.get(key, None)
-    finally:
-        W._write_qbeast_inner = real_inner
-        sess_b.conf.unset(key)
-        if prev_a is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev_a)
-    assert checked["b_active"], "nested session-B write missed override"
-    assert checked["b_restored"], "session-B restore hit the wrong conf"
-    assert after_a == "123", "session-A restore lost its own sentinel"
-    assert not W._ARROW_STATE, "state map must drain to empty"

@@ -45,9 +45,10 @@ def main() -> None:
 
     for name in names:
         fn, _sql = QUERIES[name]
-        try:  # warmup at sf0.001 (codegen + Arrow worker spinup)
-            fn(spark, "/root/testdata/sf0.001").write.format("noop") \
-                .mode("overwrite").save()
+        try:  # one discarded run on the measured data: codegen, Arrow
+            # worker spinup and that scale's caches are warm for sample 1
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            spark.catalog.clearCache()
         except Exception as e:
             print(f"{name}: warmup failed: {e}")
         samples = []
